@@ -36,6 +36,16 @@ object H {
     * once to scale 4, then emitted as DOUBLE. Oracle twin: [[oAvg]]. */
   def davg(c: Column): Column = (sum(c.cast(D)) / count(c)).cast(D).cast("double")
 
+  /** round(x, 6) the way DuckDB computes it: std::round(x·1e6) / 1e6.
+    * Spark's round(double, 6) instead rounds x's shortest decimal repr
+    * half-up, and the two part when x·1e6 sits just below a half:
+    * 8155/16000 · 1e6 = 509687.49999999994, which DuckDB rounds to
+    * 0.509687 and Spark's round(x, 6) to 0.509688. Rounding the scaled
+    * double to 0 places agrees with std::round (both round x·1e6's own
+    * value, halves away from zero), and the final division is the same
+    * IEEE operation in both engines. */
+  def round6(c: Column): Column = round(c * 1e6, 0) / 1e6
+
   /** Oracle-side spelling of dsum/davg. */
   def oSum(x: String): String = s"CAST(SUM(CAST($x AS DECIMAL(38,4))) AS DOUBLE)"
   def oAvg(x: String): String =

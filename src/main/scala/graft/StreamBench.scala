@@ -69,8 +69,8 @@ object StreamBench {
     val standFeat = spark.read
       .parquet(graft.llm.Dedup.ingestFeatPath(spark, dir))
       .filter(col("doc_id") % 2 === 0)
-    // the funnel persists+counts the index internally; time it separately
-    // by building one here first (Memo makes the feat table a read)
+    // the funnel builds and broadcasts the index internally; time the
+    // feat read separately here first (Memo makes the feat table a read)
     standFeat.count()
     val tIdx = (System.nanoTime() - tIdx0) / 1e9
 

@@ -102,10 +102,13 @@ object Spectral {
       // posexplode emits 0..n-1 per row, so distinct pos == 0..max(n)-1.
       // Guarded head: an empty or all-null embeddings table must fail
       // loudly here (ADVICE r15), not as an NPE three operators later.
+      // dim > 0 as well as non-null: with legacy sizeOfNull (non-ANSI)
+      // size(null) = -1, so an all-null column reads max = -1, not null.
       val dim = Option(base.agg(max(size(col("varr")))).head().get(0))
         .map(_.asInstanceOf[Int])
+        .filter(_ > 0)
         .getOrElse(throw new IllegalStateException(
-          s"pca_topdir: embeddings table at $dir is empty or all-null"))
+          s"pca_topdir: embeddings table at $dir is empty, all-null or all-empty"))
       // Accumulator stays DECIMAL(28,8): a (28,8)+(28,8) add yields
       // (29,8) — no precision overflow, so Spark never drops scale (a
       // (38,8) accumulator overflows to p39 on every add and the

@@ -335,7 +335,8 @@ object Windows {
     // Navigation + distribution functions over the full partition frame:
     // first/last/nth order per priority class plus each order's
     // cumulative-distribution position. cume_dist is an exact small
-    // rational (peers≤ / total) — the same double in both engines.
+    // rational (peers≤ / total) — the same double in both engines — and
+    // H.round6 rounds it with the oracle's arithmetic.
     "q_win_nav" -> Q(
       (s, dir) => {
         val ord = Window.partitionBy(col("o_orderpriority"))
@@ -346,7 +347,7 @@ object Windows {
                   first(col("o_orderkey")).over(full).as("top_key"),
                   last(col("o_orderkey")).over(full).as("bottom_key"),
                   nth_value(col("o_orderkey"), 2).over(full).as("second_key"),
-                  round(cume_dist().over(ord), 6).as("cd"))
+                  H.round6(cume_dist().over(ord)).as("cd"))
           .filter(col("o_orderkey") <= 500)
           .orderBy(col("o_orderpriority"), col("o_orderkey"))
       },
@@ -408,7 +409,7 @@ object Windows {
                   col("key").as("o_orderkey"),
                   col("price").as("o_totalprice"),
                   col("top_key"), col("bottom_key"), col("second_key"),
-                  round(col("rnk").cast("double") / col("n").cast("double"), 6)
+                  H.round6(col("rnk").cast("double") / col("n").cast("double"))
                     .as("cd"))
           .orderBy(col("o_orderpriority"), col("o_orderkey"))
       },

@@ -468,10 +468,11 @@ object Streams {
     * stream; the standing corpus's featurized table is the static side.
     *
     *  - The standing probe structures (hash set, bloom, chunk-hash set —
-    *    all broadcast-sized) are built ONCE before the query starts and
-    *    persisted, so N micro-batches pay the build once, not N times
-    *    (at 100 TB the standing side is the corpus; rebuilding it per
-    *    batch would be the scale-killer).
+    *    all broadcast-sized) are built ONCE before the query starts, as
+    *    one broadcast value (Dedup.StandingIndex.probe), so N
+    *    micro-batches pay the build once, not N times (at 100 TB the
+    *    standing side is the corpus; rebuilding it per batch would be
+    *    the scale-killer).
     *  - Cross-batch `dropDuplicatesWithinWatermark` on doc_id guards
     *    at-least-once file delivery (a replayed file must not re-emit
     *    verdicts). Its keyed state is the query's RocksDB row — bounded
@@ -482,6 +483,14 @@ object Streams {
     *    them through the SAME Dedup.ingestVerdicts the declared key
     *    runs; outputs land in the idempotent per-batch parquet layout of
     *    [[foreachBatchParquet]] (replayed batch = same dir, overwritten).
+    *    Featurize + verdicts + write is ONE job per micro-batch (the
+    *    verdicts are a projection over the broadcast index), so the
+    *    upstream stateful dedup scan runs exactly once per batch with no
+    *    pin: each extra job over the batch frame would re-execute that
+    *    scan and re-commit its state version (observed before as
+    *    numRowsTotal = 3x the docs and, at sf10,
+    *    CANNOT_LOAD_STATE_STORE.UNRELEASED_THREAD_ERROR). StreamingSpec
+    *    pins the state row count.
     *
     * Batch-equivalence (pinned in StreamingSpec): a doc's verdict is a
     * function of its OWN features plus the standing index only, so
@@ -492,14 +501,13 @@ object Streams {
                    outDir: String, checkpointDir: String,
                    maxFilesPerTrigger: Int = 1): StreamingQuery = {
     val idx = graft.llm.Dedup.standingIndexOf(standFeat)
-    val pinned = Seq(idx.standH, idx.bloom, idx.standC)
-    pinned.foreach(_.persist().count())
-    // Index lifecycle (r14, ADVICE): the three persisted frames must not
-    // outlive the query — every funnel (re)start (checkpoint-restart in
-    // StreamingSpec, a nightly rerun in production) would otherwise pin a
-    // fresh generation of cached blocks for the session lifetime. A
-    // terminated query (graceful or failed) releases its own index here;
-    // the listener self-removes so restarts don't stack listeners.
+    idx.probe // build and broadcast the index before the first batch
+    // Index lifecycle (r14, ADVICE): the broadcast must not outlive the
+    // query — every funnel (re)start (checkpoint-restart in
+    // StreamingSpec, a nightly rerun in production) would otherwise keep
+    // a fresh index generation for the session lifetime. A terminated
+    // query (graceful or failed) releases its own index here; the
+    // listener self-removes so restarts don't stack listeners.
     val q = fileStream(spark, incomingDir, docSchema, maxFilesPerTrigger)
       .withColumn("ingest_ts", current_timestamp())
       .withWatermark("ingest_ts", "1 hour")
@@ -511,40 +519,23 @@ object Streams {
         // the micro-batch session is a clone — re-register the kernels
         // (idempotent) so featurize's tid60/shingles3 resolve
         graft.functions.Custom.register(batch.sparkSession)
-        // PIN the batch before fanning out (r14): the verdict pipeline
-        // runs several jobs over this frame (featurization, the
-        // broadcast probe builds, the final write), and EVERY job would
-        // otherwise re-execute the upstream stateful dedup scan —
-        // observed as numRowsTotal = 3x the batch's docs (the same
-        // version triple-committed) and, at sf10, as a hard deadlock
-        // (CANNOT_LOAD_STATE_STORE.UNRELEASED_THREAD_ERROR: concurrent
-        // re-executions of one batch racing the per-partition RocksDB
-        // stamp). persist + count materializes the state scan exactly
-        // once; everything downstream reads the cache, and the cache is
-        // dropped when the batch's work is done.
-        val pinned = batch.drop("ingest_ts").persist()
-        try {
-          pinned.count()
-          graft.llm.Dedup.ingestVerdicts(
-              graft.llm.Dedup.featurize(pinned), idx)
-            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        } finally pinned.unpersist(blocking = false)
+        graft.llm.Dedup.ingestVerdicts(
+            graft.llm.Dedup.featurize(batch.drop("ingest_ts")), idx)
+          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
         ()
       }
       .start()
     // Release keyed on RUN id, not query id (r15, ADVICE medium): a
     // checkpoint restart reuses the query id (only runId changes), so an
     // id-keyed listener on the NEW run would fire on the OLD run's late
-    // async QueryTerminatedEvent — unpersisting the new run's freshly
-    // pinned index mid-query (silent recompute per batch) and
-    // self-removing so the new run's index is never released. runId is
-    // unique per run, so a stale event can never match. Release is CAS-
-    // once: the listener and the missed-event check below may race, and
-    // double-unpersist of the NEXT funnel's generation must be impossible.
+    // async QueryTerminatedEvent — destroying the new run's index
+    // mid-query and self-removing so the new run's index is never
+    // released. runId is unique per run, so a stale event can never
+    // match. Release is CAS-once: the listener and the missed-event check
+    // below may race, and a double release must be impossible.
     val released = new java.util.concurrent.atomic.AtomicBoolean(false)
     def release(): Unit =
-      if (released.compareAndSet(false, true))
-        pinned.foreach(_.unpersist(blocking = false))
+      if (released.compareAndSet(false, true)) idx.release()
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()

@@ -135,6 +135,23 @@ class OperatorSpec extends SparkSuite {
     assert(bad == 0, "tid60 diverged from the SQL md5 spelling")
   }
 
+  test("H.round6: DuckDB's std::round(x*1e6)/1e6 at a just-below-half value") {
+    // 8155/16000 = 0.5096875 in decimal, but as a double times 1e6 it is
+    // 509687.49999999994: DuckDB rounds that down, Spark's round(x, 6)
+    // rounds the shortest repr 0.5096875 up (the q_win_nav_dist cd case).
+    val r = spark.range(1)
+      .select(lit(8155.0 / 16000.0).as("x"))
+      .select(H.round6(col("x")).as("r6"), round(col("x"), 6).as("spark_r6"),
+              H.round6(lit(0.5)).as("half"), H.round6(lit(-0.0000025)).as("neg"))
+      .head()
+    assert(8155.0 / 16000.0 * 1e6 == 509687.49999999994)
+    assert(r.getDouble(0) == 0.509687, s"round6 gave ${r.getDouble(0)}")
+    assert(r.getDouble(1) == 0.509688, "Spark's round(x, 6) no longer differs here")
+    // exact halves still round away from zero, as std::round does
+    assert(r.getDouble(2) == 0.5 && r.getDouble(3) == -0.000003,
+      s"round6 halves: ${r.getDouble(2)}, ${r.getDouble(3)}")
+  }
+
   test("src_csv_malformed: the 3 broken lines are retained as corrupt records") {
     // run the declared query first so the malformed fixture exists
     Registry.byName("src_csv_malformed").fn(spark, sf).collect()

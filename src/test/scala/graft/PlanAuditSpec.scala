@@ -1361,14 +1361,21 @@ class PlanAuditSpec extends SparkSuite {
     // The ingest funnel's 100 TB claim (r11 VERDICT #6): text is read
     // ONCE (ingestFeatPath's single projection materializes hash +
     // shingles + chunks); the funnel itself moves token-free keys only.
+    // The standing side is one broadcast VALUE probed by native kernels
+    // row by row, so the incoming side neither joins nor hash-shuffles
+    // (the only exchange left is the final ORDER BY's range shuffle).
     graft.functions.Custom.register(spark)
     val p = planOf("llm_ingest_e2e")
     assert(!p.contains("documents.parquet"),
       s"final plan re-scans the raw corpus — featurization not honored:\n$p")
     assert(p.contains("ingest_feat"),
       s"final plan does not read the materialized featurization:\n$p")
-    assert(p.contains("BroadcastExchange") || p.contains("BroadcastQueryStage"),
-      s"standing-side structures (hash set / bloom / chunk store) not broadcast:\n$p")
+    assert(!p.contains("Join"), s"verdicts must not join the standing side:\n$p")
+    assert(!p.contains("Exchange hashpartitioning"),
+      s"incoming side must not hash-shuffle:\n$p")
+    assert(!p.contains("ScalaUDF"), s"probe must be a native kernel, not a UDF:\n$p")
+    Seq("probe_exact", "probe_maybe", "probe_shared").foreach(k =>
+      assert(p.contains(k), s"$k probe kernel missing from the plan:\n$p"))
   }
 
   test("q_mannwhitney / q_ks_test: distributed prefix sums, no corpus-sized single-partition window") {

@@ -44,6 +44,28 @@ class SpectralSpec extends SparkSuite {
     }
   }
 
+  test("pca_topdir: an all-null embeddings column fails loudly under legacy size(null) = -1") {
+    // Non-ANSI sessions with legacy sizeOfNull read size(null) as -1, so
+    // max(size(varr)) over an all-null column is -1, not null: the guard
+    // must reject dim <= 0 too, not only a null max.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.ansi.enabled", "false")
+    s2.conf.set("spark.sql.legacy.sizeOfNull", "true")
+    val dir = java.nio.file.Files.createTempDirectory("graft_pca_null").toString
+    s2.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(1L, null), org.apache.spark.sql.Row(2L, null)),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("embedding",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
+      .write.parquet(s"$dir/embeddings.parquet")
+    assert(s2.read.parquet(s"$dir/embeddings.parquet")
+      .agg(max(size(col("embedding")))).head().getInt(0) == -1,
+      "session does not reproduce the legacy size(null) = -1 reading")
+    val e = intercept[IllegalStateException](Spectral.topDirStage(s2, dir))
+    assert(e.getMessage.contains("all-null"), e.getMessage)
+  }
+
   test("llm_pca_power: result is a unit vector over the embedding dims") {
     val rows = Registry.byName("llm_pca_power").fn(spark, sf).collect()
     assert(rows.length == 64, s"expected 64 dims, got ${rows.length}")

@@ -533,9 +533,22 @@ class StreamingSpec extends SparkSuite {
       val standFeat = spark.read
         .parquet(graft.llm.Dedup.ingestFeatPath(spark, sf))
         .filter(col("doc_id") % 2 === 0)
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
       val q = Streams.ingestFunnel(spark, inDir, docs.schema, standFeat,
                                    outDir, ckpt)
       try { q.processAllAvailable(); assertRocksDBEngaged(q) } finally q.stop()
+      // State rows: each micro-batch's verdicts are ONE job over the
+      // batch, so the dedup state holds exactly one row per distinct
+      // incoming doc. A second job over the batch frame re-executes the
+      // state scan and inflates this (the r14 triple-execution shape).
+      val stateMax = q.recentProgress.flatMap(_.stateOperators.map(_.numRowsTotal)).max
+      val nIncoming = docs.filter(col("doc_id") % 2 =!= 0).select("doc_id").distinct().count()
+      assert(stateMax == nIncoming,
+        s"max state rows $stateMax != distinct incoming docs $nIncoming")
+      // The standing index is a broadcast, never a cached frame: nothing
+      // the funnel ran stays pinned once the query stops.
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(leaked.isEmpty, s"funnel left persisted RDDs behind: $leaked")
       val batchDirs = new java.io.File(outDir).listFiles()
         .filter(_.getName.startsWith("batch_")).map(_.toString).sorted
       assert(batchDirs.length >= 3, // 3 input files, maxFilesPerTrigger=1
