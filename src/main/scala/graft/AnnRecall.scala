@@ -70,7 +70,6 @@ object AnnRecall {
     * centers (center_id, q_emb, q_bucket). */
   def plant(s: SparkSession, dir: String, centers: Int, members: Int,
             epsScale: Double = 1.0): (DataFrame, DataFrame) = {
-    graft.functions.Custom.register(s)
     val base = Tables.embeddings(s, dir)
       .filter(col("vec_id") < centers)
       .select(col("vec_id").as("center_id"), col("embedding"))
@@ -205,15 +204,7 @@ object AnnRecall {
     // epsScale > 1 loosens the planted clusters (bigger θ, more bucket
     // crossings) so the curve can be recorded at several geometries
     val epsScale = pos.lift(3).map(_.toDouble).getOrElse(1.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     if (widths.isDefined) {
       widthCurve(spark, dir, centers, members, epsScale, widths.get)

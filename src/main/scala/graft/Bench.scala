@@ -117,15 +117,7 @@ object Bench {
     // by this scale tag (r14) so sf0.1/sf1/sf10 runs never clobber each
     // other's fixture layouts
     sys.props("graft.fixtures.sf") = sfDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Untimed warmup: session/JIT/codegen spin-up and parquet footer reads
     // would otherwise all land on whichever query happens to run first.
     // Deliberately NOT df.cache(): measured 34.4 s → 71.2 s at sf0.1 —
@@ -133,7 +125,6 @@ object Bench {
     // reader on every scan-heavy query here (OS page cache already holds
     // the bytes after this warmup).
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    Tables.configure(spark)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").count()

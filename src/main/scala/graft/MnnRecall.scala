@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured recall of the linear mutual-NN plan (llm_mutual_nn_snm,
@@ -21,16 +20,7 @@ object MnnRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     sys.props("graft.fixtures.sf") = dir // r14: sf-scoped fixture tree
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Custom.register(spark)
+    val spark = Session.local()
 
     def pairs(key: String): (Set[(Long, Long)], Double) = {
       val t0 = System.nanoTime()

@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for declared keys — the optimization
   * rounds' evidence artifact (plans/rNN/<key>_{before,after}.txt).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [key,key,...]
-  * (no keys = every declared key). The session mirrors Bench's config so
-  * the dumped plan is the one the bench times (same shuffle partitions,
-  * same master width from SPARK_GRAFT_CPUS).
+  * (no keys = every declared key). The session is Bench's
+  * ([[Session.local]]), so the dumped plan is the one the bench times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -15,16 +13,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     sys.props("graft.fixtures.sf") = sfDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Session.local()
     val keys: Seq[String] =
       if (args.length > 3) args(3).split(",").toSeq
       else Registry.all.map(_._1)
@@ -34,9 +23,7 @@ object PlanDump {
     // (the memoized stage itself is just a Scan ExistingRDD) — the
     // optimization rounds' evidence for the priced stage line items.
     val stageBuilders: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "stage:near_pairs" -> (() => {
-        graft.functions.Custom.register(spark)
-        graft.llm.Dedup.prefixNearPairs(spark, sfDir) }),
+      "stage:near_pairs" -> (() => graft.llm.Dedup.prefixNearPairs(spark, sfDir)),
       "stage:co_supply_edges" ->
         (() => graft.operators.Analytics.coSupplyEdgesPlan(spark, sfDir)))
     def dump(k: String, df: org.apache.spark.sql.DataFrame): Unit = {

@@ -6,7 +6,14 @@ import org.apache.spark.sql.types.DecimalType
 
 /** One declared operator: a DataFrame builder plus (when SQL-expressible)
   * the equivalent DuckDB oracle SQL the driver hash-compares against. */
-case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String] = None)
+case class Q(body: (SparkSession, String) => DataFrame, oracle: Option[String] = None) {
+  /** The key boundary every caller goes through (SparkEntry, Verify,
+    * Bench, PlanDump, tests, the benchmark): install the session's
+    * configs and functions ([[Tables.configure]]), then build. Bodies
+    * may assume both and never register anything themselves. */
+  val fn: (SparkSession, String) => DataFrame =
+    (s, dir) => body(Tables.configure(s), dir)
+}
 
 /** Hash-stability helpers (SURVEY §7.4). The driver's correctness gate is a
   * bit-exact hash compare against DuckDB, so:

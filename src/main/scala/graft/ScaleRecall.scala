@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured-recall harness for the approximate record-linkage plan:
@@ -55,16 +54,7 @@ object ScaleRecall {
     val dir = args(0)
     sys.props("graft.fixtures.sf") = dir // r14: sf-scoped fixture tree
     val dedupOnly = args.contains("--dedup-only")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Custom.register(spark)
+    val spark = Session.local()
     import graft.operators.Insights
 
     val corpus = Tables.customer(spark, dir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput measurement for the stream-side ingest funnel
@@ -20,14 +19,9 @@ object StreamBench {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     sys.props("graft.fixtures.sf") = dir // r14: sf-scoped fixture tree
     val nFiles = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = Session.local(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // sf10 batches (250k docs) hit CANNOT_LOAD_STATE_STORE.
       // UNRELEASED_THREAD_ERROR under the default per-batch FULL-SNAPSHOT
       // checkpoint: the maintenance thread holds the RocksDB instance
@@ -36,8 +30,8 @@ object StreamBench {
       // the delta, snapshots amortize in maintenance) and what a 100 TB
       // deployment runs; the raised lock timeout covers the first
       // snapshot's upload on this single host.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.lockAcquireTimeoutMs", "600000")
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.lockAcquireTimeoutMs" -> "600000",
       // Second sf10 failure mode: the per-instance MAINTENANCE threads
       // (snapshot fold-up) held instance locks >10 min against the next
       // batch's loads — 32 instances' maintenance racing one JVM's batch
@@ -45,18 +39,14 @@ object StreamBench {
       // maintenance, so pushing the interval past the run length removes
       // the contention window entirely (production would keep the
       // default interval but spread instances across executors).
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s",
       // State telemetry reads q.recentProgress after the run; the default
       // retention (100 updates) keeps only the TAIL, so with nFiles > 100
       // under maxFilesPerTrigger=1 state_rows_max would be computed over
       // the last 100 batches only (r15, ADVICE). Retain every batch plus
       // idle-trigger headroom so max/last stay meaningful at any nFiles.
-      .config("spark.sql.streaming.numRecentProgressUpdates",
+      "spark.sql.streaming.numRecentProgressUpdates" ->
         math.max(256, nFiles * 4).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Custom.register(spark)
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-streambench").toString
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"

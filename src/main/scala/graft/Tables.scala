@@ -19,10 +19,16 @@ import org.apache.spark.sql.functions._
   *  - session timezone pinned UTC for TimestampNTZ parity with DuckDB.
   */
 object Tables {
-  /** Runtime-settable session configs every entry point needs. */
+  /** The one per-session install: the runtime-settable session configs
+    * every entry point needs, plus the engine's native functions
+    * ([[graft.functions.Custom.functions]]). Idempotent; once the
+    * functions are present it costs one registry lookup beyond the two
+    * conf sets. [[Q.fn]] runs it before every key, so a session built
+    * elsewhere needs nothing from its caller. */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if (!graft.functions.Custom.registered(spark)) graft.functions.Custom.register(spark)
     spark
   }
 

@@ -229,7 +229,6 @@ object Curation {
     // at 6, sums in DECIMAL, and casts to DOUBLE once at the end.
     "llm_dsir" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         // ONE materialized token-bucket table (r15): tok feeds the cq,
         // cp, and per-doc stats branches — and its chain is shuffle-free
         // (scan → explode → md5 bucket), so left declarative every
@@ -327,7 +326,6 @@ object Curation {
     // token array, zero joins, zero shuffles before the output sort.
     "llm_span_mask" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         Tables.documents(s, dir)
           .withColumn("toks", expr(toksE))
           // The Bernoulli mask digests ONCE per position (review fix:

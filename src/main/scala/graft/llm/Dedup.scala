@@ -39,7 +39,7 @@ object Dedup {
     * Spark side rides the [[graft.functions.Sketches.Tid60]] kernel
     * (digest-byte bit math; bit-identical to the SQL spelling
     * `CAST(conv(substr(md5(tok), 1, 15), 16, 10) AS BIGINT)` the oracle
-    * keeps) — callers must have run `Custom.register(s)`. */
+    * keeps). */
   private def tidE(tok: String) = s"tid60($tok)"
 
   private val duckToks = "string_split(lower(trim(text)), ' ')"
@@ -64,7 +64,6 @@ object Dedup {
     * a declared query — see [[Memo]]. */
   private[llm] def shingled(s: org.apache.spark.sql.SparkSession, dir: String) =
     Memo.stage(s, dir, "shingles3") {
-      graft.functions.Custom.register(s)
       Memo.cut(s)(Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), expr(s"shingles3($toksE)").as("sh")))
     }
@@ -282,7 +281,6 @@ object Dedup {
     * corpus half of it as the probe index. */
   private[llm] def minhashBands(s: org.apache.spark.sql.SparkSession,
                                 dir: String) = {
-    graft.functions.Custom.register(s)
     val P = 1000003L
     shingled(s, dir)
       .withColumn("tids", expr(s"transform(sh, tok -> ${tidE("tok")} % $P)"))
@@ -534,7 +532,6 @@ object Dedup {
     // query. Evening the widths floors every band at 64 buckets.)
     "llm_dedup_simhash" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         // ONE fingerprint pass (r15): both banded join sides derive from
         // sh, and its chain is shuffle-free (scan → tokenize → md5 per
         // token → simhash32), so left declarative the whole fingerprint
@@ -711,7 +708,6 @@ object Dedup {
     // executor in KBs where the exact shingle set would be TBs.
     "llm_dedup_bloom" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val WORDS = 4231L // m = 4231*62 = 262,322 bits
         def bitsOf(side: String) =
           shingled(s, dir)
@@ -883,7 +879,6 @@ object Dedup {
     // pieces.
     "llm_ingest_e2e" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val F = s.read.parquet(ingestFeatPath(s, dir))
         val inc = F.filter(col("doc_id") % 2 =!= 0)
         val stand = F.filter(col("doc_id") % 2 === 0)
@@ -973,7 +968,6 @@ object Dedup {
     * per chunk; shared by llm_cdc_chunks / llm_cdc_ratio. */
   private def cdcChunkStream(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.Custom.register(s) // tid60 kernel
     withCdcChunks(Tables.documents(s, dir).withColumn("toks", expr(toksE)))
       .select(col("doc_id"), explode(col("chunks")).as("chunk"))
   }
@@ -993,7 +987,7 @@ object Dedup {
     * 3-shingle array `sh`, CDC chunk array `chunks` — ONE projection,
     * one text scan (the batch path materializes it via
     * [[ingestFeatPath]]; the stream path runs it per micro-batch).
-    * Callers must have run Custom.register (tid60/shingles3). */
+    * `docs`' session must be installed ([[Tables.configure]]). */
   private[graft] def featurize(docs: org.apache.spark.sql.DataFrame) =
     withCdcChunks(docs.withColumn("toks", expr(toksE)))
       .select(col("doc_id"),
@@ -1092,7 +1086,6 @@ object Dedup {
   private[graft] def ingestFeatPath(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
     Memo.materializedPath(s, dir, "ingest_feat") { tmp =>
-      graft.functions.Custom.register(s)
       featurize(Tables.documents(s, dir)).write.parquet(tmp)
     }
 

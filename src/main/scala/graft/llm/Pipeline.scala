@@ -22,7 +22,7 @@ object Pipeline {
 
   /** Deterministic uniform in [0, 1e6): md5-derived 60-bit id mod 1e6.
     * Identical arithmetic on the DuckDB side; Spark rides the
-    * [[graft.functions.Sketches.Tid60]] kernel (callers register it). */
+    * [[graft.functions.Sketches.Tid60]] kernel. */
   private def uE(x: String) =
     s"(tid60($x) % 1000000)"
   private def duckU(x: String) =
@@ -153,7 +153,6 @@ object Pipeline {
     // re-runs, retries, and engine swaps all draw the same rows.
     "llm_sample_stratified" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         Tables.documents(s, dir)
         .withColumn("u", expr(uE("concat('sample:', lang, ':', CAST(doc_id AS STRING))")))
         .filter(col("u") < when(col("lang") === "en", 200000).otherwise(500000))
@@ -172,7 +171,6 @@ object Pipeline {
     // so adding data never reassigns existing documents.
     "llm_split_train" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         Tables.documents(s, dir)
         .withColumn("b", expr(uE("concat('split:', CAST(doc_id AS STRING))")) % 10)
         .withColumn("split",
@@ -363,7 +361,6 @@ object Pipeline {
     // table is |clustered docs| ≪ corpus.
     "llm_split_clustersafe" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         val labels = clusterLabels(s, dir)
           .select(col("id").as("doc_id"), col("lbl").as("rep"))
         Tables.documents(s, dir)
@@ -643,7 +640,6 @@ object Pipeline {
     // boundaries through a single sampling pass and skew-prone ranges).
     "llm_global_shuffle" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         val w = Window.partitionBy(col("shard")).orderBy(col("u"), col("doc_id"))
         Tables.documents(s, dir)
           .withColumn("u", expr(uE("concat('shuffle:', CAST(doc_id AS STRING))")))
@@ -673,7 +669,6 @@ object Pipeline {
     // gate proves the layout round-trips losslessly with pos intact.
     "snk_shuffle_shards" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
         val out = s"${graft.Fixtures.dir}/shuffle_shards_$tag"
         val w = Window.partitionBy(col("shard")).orderBy(col("u"), col("doc_id"))

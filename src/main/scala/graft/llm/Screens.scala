@@ -388,7 +388,6 @@ object Screens {
     // |groups|-row table.
     "llm_dp_counts" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         val u = "((tid60(concat(lang, ':', source, ':dp1')) % 1000000 + 0.5) / 1000000.0)"
         Tables.documents(s, dir)
           .groupBy(col("lang"), col("source"))
@@ -735,7 +734,6 @@ object Screens {
     // identically; the fused score is a 2-term double chain, rounded 6.
     "llm_rrf_fusion" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         // ONE tokenization (r15): dt feeds the query-term and corpus
         // sides, and its chain is shuffle-free (scan → explode), so left
         // declarative both consumers re-ran it. Memo.cut materializes

@@ -124,7 +124,6 @@ object Signals {
     // index.
     "llm_winnowing" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         Tables.documents(s, dir)
           .withColumn("toks", expr(toksE))
           .withColumn("grams", expr(grams3))
@@ -278,7 +277,6 @@ object Signals {
     // false-positive rate the 4-sigma gate implies.
     "llm_watermark_detect" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         Tables.documents(s, dir)
           .select(col("doc_id"), explode(expr(toksE)).as("tok"))
           .groupBy(col("doc_id"))
@@ -448,7 +446,6 @@ object Signals {
     // banned — the driver's pandas row-sort crashes on ndarray cells).
     "llm_feature_hash" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         Tables.documents(s, dir)
           .withColumn("toks", expr(toksE))
           .withColumn("fv_arr", expr(

@@ -27,7 +27,7 @@ object Similarity {
     * — bit-identical to the `aggregate(zip_with(...))` sequential double
     * fold it replaced (same order of additions; parity proven in
     * OperatorSpec), ~10× cheaper than the interpreted fold on the pair
-    * loops. Queries using it must call `Custom.register(s)` first. */
+    * loops. */
   private def dotE(a: String, b: String): String = s"vec_dot($a, $b)"
   private val normE = s"sqrt(${dotE("embedding", "embedding")})"
 
@@ -59,7 +59,6 @@ object Similarity {
     * re-attach by id after the candidate join, exactly like the LSH dedup
     * family. */
   private def cosPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    graft.functions.Custom.register(s)
     val W = math.acos(0.1999) // band width with ulp margin for round(·, 6)
     val e = Tables.embeddings(s, dir)
       .withColumn("nrm", expr(normE))
@@ -102,7 +101,6 @@ object Similarity {
     * scanned once; all ranking ties break deterministically (vec_id,
     * then label). */
   private def knnPreds(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    graft.functions.Custom.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, dir).withColumn("nrm", expr(normE))
     val q = e.filter(col("vec_id") % 10 === 0)
@@ -228,7 +226,6 @@ object Similarity {
     // the exact baseline every ANN variant is judged against.
     "llm_sim_topk" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val e = Tables.embeddings(s, dir)
           .withColumn("nrm", expr(normE))
         val q = e.filter(col("vec_id") === 0)
@@ -256,7 +253,6 @@ object Similarity {
     // documented recall-for-throughput trade.
     "llm_sim_topk_ivf" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val e = Tables.embeddings(s, dir)
           .withColumn("nrm", expr(normE))
           .withColumn("bucket", expr(codeE))
@@ -311,7 +307,6 @@ object Similarity {
     // measured recall clears the SLA.
     "llm_sim_topk_multiprobe" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val e = Tables.embeddings(s, dir)
           .withColumn("nrm", expr(normE))
           .withColumn("bucket", expr(codeE))
@@ -399,7 +394,6 @@ object Similarity {
     // dense recompute over the same probe set exactly.
     "llm_ann_partitioned" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val lake = annLake(s, dir)
         val q = lake.filter(col("vec_id") === 0)
           .withColumn("q_nrm", expr(normE))
@@ -448,7 +442,6 @@ object Similarity {
     // densely in SQL, so the wider bucketing itself is hash-gated.
     "llm_ann_width8" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val lake = annLakeW(s, dir, 8)
         val q = lake.filter(col("vec_id") === 0)
           .withColumn("q_nrm", expr(normE))
@@ -507,7 +500,6 @@ object Similarity {
     // recomputes the 8-bit code and the full ball densely in SQL.
     "llm_ann_width8_r2" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val lake = annLakeW(s, dir, 8)
         val q = lake.filter(col("vec_id") === 0)
           .withColumn("q_nrm", expr(normE))
@@ -564,7 +556,6 @@ object Similarity {
     // partition count on the executed plan.
     "llm_ann_partitioned_h3" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val lake = annLake(s, dir)
         val q = lake.filter(col("vec_id") === 0)
           .withColumn("q_nrm", expr(normE))
@@ -700,7 +691,6 @@ object Similarity {
     // (the cosPairs discipline — never duplicate a 64-float vector 16×).
     "llm_mutual_nn_snm" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         import org.apache.spark.sql.expressions.Window
         val W = 24; val P = 8 // window per pass; projection passes
         val e = Tables.embeddings(s, dir)
@@ -859,7 +849,6 @@ object Similarity {
     // per-bucket count pins bit-exact against DuckDB.
     "llm_semdedup" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val e = Tables.embeddings(s, dir)
           .withColumn("bucket", expr(codeE))
           .withColumn("nrm", expr(normE))
@@ -954,7 +943,6 @@ object Similarity {
     // string out).
     "llm_rag_context" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val e = Tables.embeddings(s, dir).withColumn("nrm", expr(normE))
         val q = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
@@ -1007,7 +995,6 @@ object Similarity {
     // identically spelled in both engines.
     "llm_mmr_rerank" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val e = Tables.embeddings(s, dir).withColumn("nrm", expr(normE))
         val q = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
@@ -1370,7 +1357,6 @@ object Similarity {
     // rounded values, cast to DOUBLE last.
     "llm_kmeans_iter" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         import org.apache.spark.sql.expressions.Window
         val e = Tables.embeddings(s, dir)
         val cent = e
@@ -1452,7 +1438,6 @@ object Similarity {
     // window shuffle via WindowGroupLimit.
     "llm_hard_negatives" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         import org.apache.spark.sql.expressions.Window
         val e = Tables.embeddings(s, dir).withColumn("nrm", expr(normE))
         val probes = e.filter(col("vec_id") < 10)
@@ -1642,7 +1627,6 @@ object Similarity {
     // double chain both sides, rounded 6, decimal-summed into means.
     "llm_silhouette" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val e = Tables.embeddings(s, dir)
         val cent = e
           .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))

@@ -560,8 +560,8 @@ object TextAnalysis {
     // cheap near-identity key for incremental dedup.
     "llm_fingerprint" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel (oracle keeps
-        // the conv(substr(md5(...))) spelling — bit-identical)
+        // tid60 kernel (the oracle keeps the conv(substr(md5(...)))
+        // spelling — bit-identical)
         Tables.documents(s, dir)
         .withColumn("tids", expr(
           s"transform($toksE, tok -> tid60(tok) % 1000003)"))

@@ -225,7 +225,6 @@ object Training {
     // tie handling diverges.
     "llm_kl_corpus_shift" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val tok = Tables.documents(s, dir)
           .select(col("source"), explode(expr(toksE)).as("tok"))
           .withColumn("b", expr("tid60(tok) % 4096"))

@@ -30,8 +30,8 @@ object Insights {
     * declared fn_jaro substrate AND the ground-truth stream ScaleRecall
     * derives every recall view from (each view is its own streaming
     * pass; the stream is never persisted — r12 disk-full finding).
-    * Exact, therefore Σ block² (adjudicated in BASELINE §r8-sf1);
-    * callers must have run Custom.register. */
+    * Exact, therefore Σ block² (adjudicated in BASELINE §r8-sf1).
+    * `corpus`' session must be installed ([[graft.Tables.configure]]). */
   private[graft] def jaroScoredOf(corpus: org.apache.spark.sql.DataFrame) = {
     val c = corpus.select(col("c_custkey"), col("c_name"),
                           col("c_mktsegment"), col("c_nationkey"))
@@ -75,7 +75,6 @@ object Insights {
 
   private[graft] def jaroExactTop(s: org.apache.spark.sql.SparkSession,
                                   dir: String) = {
-    graft.functions.Custom.register(s)
     topPairs(jaroScoredOf(Tables.customer(s, dir)))
   }
 
@@ -437,7 +436,6 @@ object Insights {
     // SF, and deterministic per engine build either way.
     "q_weighted_sample" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         Tables.orders(s, dir)
           .withColumn("u", (expr("tid60(CAST(o_orderkey AS STRING)) % 1000000") + lit(1))
                              .cast("double") / lit(1000001.0))
@@ -522,7 +520,6 @@ object Insights {
     // reduce; the probe ships 512 words broadcast, never the member set.
     "q_bloom_filter" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val o = Tables.orders(s, dir)
         val cut = lit("1998-01-01").cast("timestamp_ntz")
         val early = o.filter(col("o_orderdate") < cut)
@@ -616,7 +613,6 @@ object Insights {
     // build because a declared query is one expression.)
     "q_theta_sketch" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         graft.plans.TopK.install(s)
         val k = 64
         val o = Tables.orders(s, dir)
@@ -892,7 +888,6 @@ object Insights {
     // same funnel order as llm_ingest_e2e stage 1.
     "fn_jaro_snm" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val reps = Tables.customer(s, dir)
           .groupBy(col("c_mktsegment"), col("c_nationkey"), col("c_name"))
           .agg(min(col("c_custkey")).as("c_custkey"))
@@ -948,7 +943,6 @@ object Insights {
     // recall SLA, and this key IS the ≥0.9-SLA pick.
     "fn_jaro_snm_w50" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val reps = Tables.customer(s, dir)
           .groupBy(col("c_mktsegment"), col("c_nationkey"), col("c_name"))
           .agg(min(col("c_custkey")).as("c_custkey"))
@@ -1128,7 +1122,6 @@ object Insights {
     // count rides along so consumers can compute the realized rate.
     "q_sample_hash" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s) // tid60 kernel
         Tables.lineitem(s, dir)
           .filter(expr("""tid60(concat(CAST(l_orderkey AS STRING), '-',
                                        CAST(l_linenumber AS STRING))) % 20 = 0"""))

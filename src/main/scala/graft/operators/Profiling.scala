@@ -195,7 +195,6 @@ object Profiling {
     // n_total*13 avoids ever comparing floats).
     "q_shuffle_balance" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val li = Tables.lineitem(s, dir)
           .withColumn("bucket", expr("tid60(CAST(l_partkey AS STRING)) % 32"))
         li.groupBy(col("bucket"))

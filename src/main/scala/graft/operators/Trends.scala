@@ -583,7 +583,6 @@ object Trends {
 
     "q_f2_moment" -> Q(
       (s, dir) => {
-        graft.functions.Custom.register(s)
         val keys = Tables.lineitem(s, dir).select(col("l_partkey"))
         val exact = keys.groupBy(col("l_partkey")).agg(count(lit(1)).as("c"))
           .agg(sum(col("c") * col("c")).as("exact"))

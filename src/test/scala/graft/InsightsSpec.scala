@@ -129,7 +129,6 @@ class InsightsSpec extends SparkSuite {
     }
     // The Expression path (codegen'd in real plans) agrees with the
     // direct kernel call on parquet-backed data.
-    graft.functions.Custom.register(spark)
     val rows = Tables.customer(spark, sf)
       .selectExpr("c_name", "jaro_winkler(c_name, 'Customer#000000001') AS jw")
       .collect()

@@ -82,7 +82,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("udaf_hll: sketch estimate within 3*rsd, invariant to partitioning") {
-    graft.functions.Custom.register(spark)
     // known-cardinality input: 10k distinct longs, each duplicated 3x
     val n = 10000L
     val base = spark.range(n * 3).select((col("id") % n).as("v"))
@@ -100,7 +99,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("udaf_quantile_sketch: partition-invariant, exact under k, near-median over k") {
-    graft.functions.Custom.register(spark)
     import spark.implicits._
     // Mergeability/determinism: the estimate is a pure function of the
     // value multiset — identical across 1/7/32-partition merge shapes.
@@ -122,7 +120,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("tid60 kernel: bit-identical to the conv(substr(md5)) spelling") {
-    graft.functions.Custom.register(spark)
     val bad = spark.range(2000)
       .selectExpr("CAST(id AS STRING) AS t",
                   "concat(repeat(CAST(id AS STRING), 7), 'é☃') AS t2",
@@ -192,7 +189,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("cosine_sim: custom Expression matches zip_with/aggregate fold bit-for-bit") {
-    graft.functions.Custom.register(spark)
     val rnd = new scala.util.Random(42)
     val vecs = Seq.fill(50)(Array.fill(64)(rnd.nextFloat() * 2 - 1))
     val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
@@ -365,7 +361,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("llm_kmeans_iter: assignment is total and cosines are in range") {
-    graft.functions.Custom.register(spark)
     val rows = Registry.byName("llm_kmeans_iter").fn(spark, sf).collect()
       .map(r => (r.getInt(0).toString, r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(rows.map(_._2).sum == Tables.embeddings(spark, sf).count(),
@@ -525,7 +520,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("llm_dedup_bloom: zero false negatives — structural, every row") {
-    graft.functions.Custom.register(spark)
     val rows = Registry.byName("llm_dedup_bloom").fn(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -560,7 +554,6 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("q_hll_sliding: trailing estimate is exact in the sparse regime, per day") {
-    graft.functions.Custom.register(spark)
     val rows = Registry.byName("q_hll_sliding").fn(spark, sf).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getBoolean(2)), "a day's sliding estimate left the 3-rsd bound")

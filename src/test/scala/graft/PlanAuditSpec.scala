@@ -57,7 +57,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_sim_topk: brute-force scan ends in TakeOrderedAndProject") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_sim_topk")
     assert(p.contains("TakeOrderedAndProject"), s"full sort instead of top-k:\n$p")
     assert(p.contains("vec_dot"), s"codegen kernel missing:\n$p")
@@ -77,7 +76,6 @@ class PlanAuditSpec extends SparkSuite {
     // near_pairs stage materializes — the r8 skew hardening: candidates
     // must come from the rarest-first PREFIX index (df aggregate + per-doc
     // ranking window), never a nested-loop pair join.
-    graft.functions.Custom.register(spark)
     val p = graft.llm.Dedup.prefixNearPairs(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("HashAggregate"), s"df table not aggregated:\n$p")
@@ -91,7 +89,6 @@ class PlanAuditSpec extends SparkSuite {
     // The shared pair table is a write-once/read-many pipeline stage: the
     // consumer's own plan must be a scan of the checkpointed stage (plus
     // the declared casts/sort), not a recomputation of the pair join.
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_dedup_near")
     assert(p.contains("Scan ExistingRDD"),
       s"llm_dedup_near does not read the checkpointed stage:\n$p")
@@ -106,7 +103,6 @@ class PlanAuditSpec extends SparkSuite {
     // 0.8-0.9, r=3 → 1.0 (see the key's comment), so the declared row
     // ships the hamming-3 ball; read back its self-measured recall and
     // pin the SLA floor.
-    graft.functions.Custom.register(spark)
     val rec = Registry.byName("llm_sim_topk_multiprobe").fn(spark, sf)
       .select(col("recall")).limit(1).collect()(0).getDouble(0)
     assert(rec >= 0.9, s"multiprobe recall $rec below 0.9 SLA")
@@ -117,7 +113,6 @@ class PlanAuditSpec extends SparkSuite {
     // partition pruning — the broadcast probe join's values reach the
     // scan as a runtime PartitionFilter, so 5 of 16 bucket directories
     // are read with no driver-side bucket literal.
-    graft.functions.Custom.register(spark)
     val df = Registry.byName("llm_ann_partitioned").fn(spark, sf)
     df.collect() // DPP shows on the executed (final adaptive) plan
     val p = df.queryExecution.executedPlan.toString
@@ -132,7 +127,6 @@ class PlanAuditSpec extends SparkSuite {
     // measured r=3 → recall 1.0): the corpus-side scan must read exactly
     // the 15 ball directories — the ham-4 one is pruned AT RUNTIME from
     // the broadcast probe values, with no driver-side bucket literal.
-    graft.functions.Custom.register(spark)
     val df = Registry.byName("llm_ann_partitioned_h3").fn(spark, sf)
     df.collect() // metrics + DPP only exist on the executed (final adaptive) plan
     val p = df.queryExecution.executedPlan.toString
@@ -166,7 +160,6 @@ class PlanAuditSpec extends SparkSuite {
     // may read AT MOST 9 partition directories (fewer when a ball cell
     // is unoccupied at this sf) — pruned at runtime from probe DATA,
     // no driver-side bucket literals.
-    graft.functions.Custom.register(spark)
     import graft.llm.Similarity
     // the generated code agrees with the shipped literal at width 4
     val mismatch = graft.Tables.embeddings(spark, sf)
@@ -208,7 +201,6 @@ class PlanAuditSpec extends SparkSuite {
     // the 37-mask probe set is still a tiny broadcast, and the corpus
     // scan must read at most those 37 directories (fewer when ball cells
     // are unoccupied at this sf) — pruned at runtime from probe DATA.
-    graft.functions.Custom.register(spark)
     val df = Registry.byName("llm_ann_width8_r2").fn(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
@@ -240,7 +232,6 @@ class PlanAuditSpec extends SparkSuite {
     // The split must cost one broadcast label probe + the final groupBy —
     // a shuffled label join (labels are |clustered docs| ≪ corpus) or
     // any pairwise structure here would be the 100 TB mistake.
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_split_clustersafe")
     assert(p.contains("BroadcastHashJoin"),
       s"cluster-label join is not broadcast:\n$p")
@@ -254,7 +245,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_sim_pairs: angle-banded candidate join, no nested loop, payload re-attached by id") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_sim_pairs")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"pair join degenerated to nested loop:\n$p")
@@ -457,7 +447,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_kmeans_iter: centroids broadcast; argmax is a map-combined agg, not a window") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_kmeans_iter")
     assert(p.contains("BroadcastExchange"), s"centroids not broadcast:\n$p")
     // a vec_id window would shuffle+sort the corpus×k scored rows; the
@@ -483,7 +472,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_global_shuffle: in-shard ordering rides one shard exchange") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_global_shuffle")
     val n = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(n == 1, s"expected one hash exchange (shard window), got $n:\n$p")
@@ -517,7 +505,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_winnowing: scan-pipelined fingerprints — no join, codegen hash, top-k") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_winnowing")
     assert(!p.contains("Join"), s"winnowing should not join:\n$p")
     assert(p.contains("tid60"), s"codegen gram-hash kernel missing:\n$p")
@@ -532,7 +519,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("udaf_hll_merge: sketch cells and their rollup both combine map-side") {
-    graft.functions.Custom.register(spark)
     val p = planOf("udaf_hll_merge")
     assert(p.contains("partial_hll_sketch"), s"cell build has no partial:\n$p")
     assert(p.contains("partial_hll_merge_est"),
@@ -556,7 +542,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("q_weighted_sample: top-k by exponential key, never a global sort") {
-    graft.functions.Custom.register(spark)
     val p = planOf("q_weighted_sample")
     assert(p.contains("TakeOrderedAndProject"),
       s"weighted sample does a full corpus sort:\n$p")
@@ -883,7 +868,6 @@ class PlanAuditSpec extends SparkSuite {
     // sameResult-substitute the subtree into EVERY sibling plan that
     // derives the same shingles (near/prefix/containment/novelty/
     // dup_degree), turning plan audits order-dependent — the r6-s4 bug.
-    graft.functions.Custom.register(spark)
     Registry.byName("llm_dedup_prefix").fn(spark, sf) // builds + memoizes
     assert(spark.sharedState.cacheManager.isEmpty,
       "shared shingle stage registered in CacheManager")
@@ -904,7 +888,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_dsir: both LM bucket tables broadcast; token stream never sort-merges") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_dsir")
     // The B-bounded lm table and the 1-row totals both ride broadcasts —
     // the corpus-sized token stream must never be the build side of a
@@ -922,7 +905,6 @@ class PlanAuditSpec extends SparkSuite {
     assert(!fd.contains("Join"), s"FD audit should be join-free:\n$fd")
     assert(fd.contains("partial_count") || fd.contains("partial_sum"),
       s"FD audit not map-side combined:\n$fd")
-    graft.functions.Custom.register(spark)
     val sb = planOf("q_shuffle_balance")
     // The only join is the 1-row total broadcast back onto the 32-row
     // bucket table (nested-loop on a broadcast single row is the cheap,
@@ -944,7 +926,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_dedup_incremental: probe is equi-join against the persisted index scan") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_dedup_incremental")
     // The index side must be a parquet SCAN (the persisted nightly
     // artifact), not a recompute, and the probe an equi-join — any
@@ -1259,7 +1240,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_dedup_bloom: filter words broadcast; probe stays scan-local equi-join") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_dedup_bloom")
     assert(!p.contains("CartesianProduct"),
       s"bloom probe must never cross-join:\n$p")
@@ -1278,7 +1258,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("q_hll_sliding: merge window rides the day-reduced sketch table") {
-    graft.functions.Custom.register(spark)
     val p = planOf("q_hll_sliding")
     assert(!p.contains("CartesianProduct"),
       s"sliding merge must never cross-join:\n$p")
@@ -1345,7 +1324,6 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("llm_silhouette: centroids broadcast; corpus never shuffle-joins") {
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_silhouette")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"k-row centroid table must broadcast:\n$p")
@@ -1364,7 +1342,6 @@ class PlanAuditSpec extends SparkSuite {
     // The standing side is one broadcast VALUE probed by native kernels
     // row by row, so the incoming side neither joins nor hash-shuffles
     // (the only exchange left is the final ORDER BY's range shuffle).
-    graft.functions.Custom.register(spark)
     val p = planOf("llm_ingest_e2e")
     assert(!p.contains("documents.parquet"),
       s"final plan re-scans the raw corpus — featurization not honored:\n$p")
@@ -1450,7 +1427,6 @@ class PlanAuditSpec extends SparkSuite {
     // __pid-bearing RDD scan RDD INSTANCE, referenced by ≥2 plan paths
     // (offset branch + probe branch), and zero range exchanges anywhere
     // except the key's final global orderBy.
-    graft.functions.Custom.register(spark)
     // (VISIBLE prefixSums cuts, final global orderBy sorts) per key.
     // q_rfm nests three calls — pass N's cut evaluates pass N-1's plan
     // inside its own inner QueryExecution, so only the outermost cut's
@@ -1499,7 +1475,6 @@ class PlanAuditSpec extends SparkSuite {
     // documented fallback is df.localCheckpoint() — same one-RDD rebase
     // semantics, at the cost of pinning blocks in the block manager and
     // truncating fault-recovery lineage past the cut.
-    graft.functions.Custom.register(spark)
     val k = "q_mannwhitney"
     val base = Registry.byName(k).fn(spark, sf).collect().toSeq
     val confs = Seq("spark.sql.adaptive.enabled" -> "false",

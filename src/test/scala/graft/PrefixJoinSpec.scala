@@ -59,7 +59,6 @@ class PrefixJoinSpec extends SparkSuite {
     // keeps the quadratic candidate term Σ df² at least 10× below the
     // full index's, because corpus-df shingles sort LAST in the
     // rarest-first order and drop out of (almost) every prefix.
-    graft.functions.Custom.register(spark)
     val boiler = " common footer boilerplate text appended to every single document here"
     val docs = Tables.documents(spark, sf)
       .withColumn("text", concat(col("text"), lit(boiler)))
@@ -86,7 +85,6 @@ class PrefixJoinSpec extends SparkSuite {
     // equality pins above), and every pair the verified OUTPUT needs must
     // survive them. Unfiltered twin = the same prefix-collision join
     // with only the id ordering.
-    graft.functions.Custom.register(spark)
     val sh = Tables.documents(spark, sf).select(col("doc_id"), col("lang"),
       expr("shingles3(split(lower(trim(text)), ' '))").as("sh"))
     val pre = graft.llm.Dedup.prefixIndexOf(sh)
@@ -129,7 +127,6 @@ class PrefixJoinSpec extends SparkSuite {
     // pair of the exact quadratic plan's top-100. (The ground truth is
     // the exact join itself, which is why this is a spec and not a
     // declared column — see the key's comment.)
-    graft.functions.Custom.register(spark)
     val snm = Registry.byName("fn_jaro_snm").fn(spark, sf)
       .select(col("id_a"), col("id_b"), col("jw"))
     val exact = Registry.byName("fn_jaro").fn(spark, sf)
@@ -157,7 +154,6 @@ class PrefixJoinSpec extends SparkSuite {
     // grows. That is the derived reason the exact Σ block² key stays the
     // anchor and recall-vs-exact is fn_jaro_snm's declared contract —
     // a third sort-key pass would only move the constant, not the shape.
-    graft.functions.Custom.register(spark)
     import spark.implicits._
     val K = 40
     val corpus = (0 until K).map { i =>

@@ -239,7 +239,6 @@ class PropertySpec extends SparkSuite {
   }
 
   test("cosine bounds on random float vectors") {
-    graft.functions.Custom.register(spark)
     val rnd = new scala.util.Random(7)
     val df = Seq.fill(200)((Array.fill(16)(rnd.nextFloat * 4 - 2),
                             Array.fill(16)(rnd.nextFloat * 4 - 2)))
@@ -255,7 +254,6 @@ class PropertySpec extends SparkSuite {
       // the direct single-pass estimate bit-for-bit — the invariant
       // that makes stored sketch cells re-aggregatable in any rollup
       // order at scale.
-      graft.functions.Custom.register(spark)
       val o = Tables.orders(spark, sf)
       val direct = o.select(expr("hll_distinct(o_custkey)").as("est"))
         .as[Long].head()
@@ -273,7 +271,6 @@ class PropertySpec extends SparkSuite {
     // common window-minimum. Seeded random docs with a planted shared
     // run; checked through the same expression pipeline the declared
     // query uses.
-    graft.functions.Custom.register(spark)
     val rnd = new scala.util.Random(13)
     def doc(): Seq[String] = Seq.fill(12)("t" + rnd.nextInt(50))
     val shared = doc().take(6)
@@ -386,7 +383,6 @@ class PropertySpec extends SparkSuite {
   // hash-mismatch in a downstream dedup key.
 
   test("simhash32 kernel == 32-pass SQL majority vote on random id arrays") {
-    graft.functions.Custom.register(spark)
     val rnd = new scala.util.Random(29)
     val rows = Seq(Array.empty[Long], Array(0L), Array(-1L), Array(Long.MinValue)) ++
       Seq.fill(200)(Array.fill(rnd.nextInt(40))(rnd.nextLong()))
@@ -403,7 +399,6 @@ class PropertySpec extends SparkSuite {
   }
 
   test("minhash16 kernel == 16-pass transform/array_min SQL spelling") {
-    graft.functions.Custom.register(spark)
     val rnd = new scala.util.Random(31)
     // contract domain: ids already reduced into [0, 1000003)
     val rows = Seq(Array.empty[Long], Array(0L), Array(1000002L)) ++
@@ -419,7 +414,6 @@ class PropertySpec extends SparkSuite {
   }
 
   test("shingles3 kernel == array_distinct/transform SQL spelling") {
-    graft.functions.Custom.register(spark)
     val rnd = new scala.util.Random(37)
     // tiny vocab forces duplicate shingles; include unicode + empty tokens
     val vocab = Vector("a", "bb", "é☃", "", "tok", "x")

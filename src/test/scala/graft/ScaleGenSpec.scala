@@ -87,7 +87,6 @@ class ScaleGenSpec extends SparkSuite {
     // replica-1 docs tag every token with '~1', so NO 3-shingle can be
     // shared with replica 0 — the invariant that keeps the true near-dup
     // pair set growing linearly with the factor
-    graft.functions.Custom.register(spark)
     val nDocs = Tables.documents(spark, sf).count()
     val sh = Tables.documents(spark, out)
       .withColumn("replica", when(col("doc_id") < nDocs, 0).otherwise(1))

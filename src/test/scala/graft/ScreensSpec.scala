@@ -197,7 +197,6 @@ class ScreensSpec extends SparkSuite {
   }
 
   test("llm_dp_counts: noise is bounded, deterministic, and never exactly zero-knowledge") {
-    graft.functions.Custom.register(spark)
     val a = Registry.byName("llm_dp_counts").fn(spark, sf).collect()
     val b = Registry.byName("llm_dp_counts").fn(spark, sf).collect()
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq,
@@ -237,7 +236,6 @@ class ScreensSpec extends SparkSuite {
   }
 
   test("llm_watermark_detect: human text stays under the 4-sigma gate; a biased corpus fires it") {
-    graft.functions.Custom.register(spark)
     val rows = Registry.byName("llm_watermark_detect").fn(spark, sf).collect()
     assert(rows.nonEmpty)
     // 4-sigma one-sided false-positive rate is ~3e-5: the 500-doc human
@@ -268,7 +266,6 @@ class ScreensSpec extends SparkSuite {
   }
 
   test("llm_mutual_nn: pairs form a matching (no vector in two pairs)") {
-    graft.functions.Custom.register(spark)
     val rows = Registry.byName("llm_mutual_nn").fn(spark, sf).collect()
     assert(rows.nonEmpty)
     val ids = rows.flatMap(r => Seq(r.getLong(0), r.getLong(1)))

@@ -1,0 +1,72 @@
+package graft
+
+import graft.functions.{Custom, GraftExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+
+import scala.collection.mutable.ArrayBuffer
+
+/** The session install: what a session needs before a key runs is
+  * decided in one place ([[Tables.configure]], applied by [[Q.fn]]), and
+  * the cluster packaging ([[GraftExtensions]]) installs the same thing. */
+class SessionSpec extends SparkSuite {
+
+  private def functionNames(s: SparkSession): Set[String] =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      .functionRegistry.listFunction().map(_.funcName).toSet
+
+  test("GraftExtensions injects exactly the functions Custom.register installs, " +
+       "plus the KernelSubstitution rule") {
+    val bare = spark.newSession()
+    val builtin = functionNames(bare)
+    val registered = functionNames(Custom.register(bare)) -- builtin
+    val injected = ArrayBuffer.empty[String]
+    val rules = ArrayBuffer.empty[Rule[LogicalPlan]]
+    val ext = new SparkSessionExtensions {
+      override def injectFunction(
+          f: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+      override def injectOptimizerRule(b: SparkSession => Rule[LogicalPlan]): Unit = {
+        rules += b(spark)
+        super.injectOptimizerRule(b)
+      }
+    }
+    new GraftExtensions()(ext)
+    assert(injected.distinct.size == injected.size, s"injected twice: $injected")
+    assert(injected.toSet == registered,
+      s"injected ${injected.size} ${injected.sorted} != registered " +
+        s"${registered.size} ${registered.toSeq.sorted}")
+    assert(rules.toSeq == Seq(graft.plans.KernelSubstitution))
+  }
+
+  test("key contract: every key builds and analyses on a bare new session " +
+       "with no install by the caller") {
+    val failures = ArrayBuffer.empty[(String, String)]
+    Registry.all.foreach { case (key, q) =>
+      val bare = spark.newSession()
+      val present = Custom.functions.map(_._1).filter(bare.catalog.functionExists)
+      assert(present.isEmpty, s"$key: a new session already has $present")
+      try q.fn(bare, sf).queryExecution.assertAnalyzed()
+      catch { case e: Throwable => failures += key -> String.valueOf(e.getMessage) }
+    }
+    assert(failures.isEmpty,
+      s"${failures.size} key(s) need a caller install: ${failures.take(5).mkString("; ")}")
+  }
+
+  test("Tables.configure is idempotent and installs the whole function table") {
+    val bare = spark.newSession()
+    assert(!Custom.registered(bare))
+    Tables.configure(bare)
+    assert(Custom.functions.map(_._1).forall(bare.catalog.functionExists))
+    assert(bare.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(bare.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val before = functionNames(bare)
+    Tables.configure(bare)
+    assert(functionNames(bare) == before)
+  }
+}

@@ -4,22 +4,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared fixture: one local session per suite, UTC + ns-hazard configs
-  * pinned the same way every real entry point pins them. */
+/** Shared fixture: one local session per suite, installed once
+  * ([[Tables.configure]]: UTC, the ns-hazard conf and the native
+  * functions) the same way every real entry point installs it. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   // fixture scale tag (r14): every suite runs sf0.001; pins the suite
   // JVM's fixture tree apart from any concurrent Verify/Bench at other
   // sfs (idempotent — Fixtures.dir latches on first use)
   sys.props("graft.fixtures.sf") = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Tables.configure(SparkSession.builder()
     .master("local[4]")
     .appName(getClass.getSimpleName)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    .getOrCreate())
 
   val sf: String = "/root/testdata/sf0.001"
 

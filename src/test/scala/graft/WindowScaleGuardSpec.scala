@@ -63,7 +63,6 @@ class WindowScaleGuardSpec extends SparkSuite {
 
   test("no declared plan runs a few-partition window over corpus-growing " +
        "input outside the measured allowlist") {
-    graft.functions.Custom.register(spark)
     graft.plans.TopK.uninstall(spark)
     val flagged = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]

@@ -14,7 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ClusterSplitSpec extends AnyFunSuite with graft.SparkSuite {
 
   test("llm_split_clustersafe: no near-dup pair straddles splits; naive split leaks") {
-    graft.functions.Custom.register(spark)
     val labels = Pipeline.clusterLabels(spark, sf)
       .select(col("id").as("doc_id"), col("lbl").as("rep"))
     val assign = graft.Tables.documents(spark, sf)

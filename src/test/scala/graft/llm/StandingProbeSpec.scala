@@ -31,7 +31,6 @@ class StandingProbeSpec extends graft.SparkSuite {
     * joined against each structure, re-aggregated and joined back on
     * doc_id. */
   private def joinVerdicts(inc: DataFrame, stand: DataFrame): DataFrame = {
-    graft.functions.Custom.register(spark)
     val m = Dedup.BloomWords * 62
     def wordMask(df: DataFrame) = df
       .select(col("doc_id"), col("tok"),
@@ -76,7 +75,6 @@ class StandingProbeSpec extends graft.SparkSuite {
     * doc_id -> (n_maybe, n_chunks, n_shared, verdict). */
   private def check(inc: DataFrame, stand: DataFrame,
                     expected: Map[Long, (Long, Long, Long, String)]): Unit = {
-    graft.functions.Custom.register(spark)
     val idx = Dedup.standingIndexOf(stand)
     try {
       val got = Dedup.ingestVerdicts(inc, idx)
@@ -105,7 +103,6 @@ class StandingProbeSpec extends graft.SparkSuite {
     val docs = spark.createDataFrame(
       java.util.Arrays.asList(Row(2L, null), Row(3L, null)),
       StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
-    graft.functions.Custom.register(spark)
     val f = Dedup.featurize(docs)
     assert(f.filter(col("h").isNotNull || col("sh").isNotNull || col("chunks").isNotNull)
       .count() == 0, "featurize of a null text must give null h, sh and chunks")
@@ -115,7 +112,6 @@ class StandingProbeSpec extends graft.SparkSuite {
   }
 
   test("fewer than 3 tokens: empty shingles take the fastpath even with shared chunks") {
-    graft.functions.Custom.register(spark)
     val two = spark.createDataFrame(java.util.Arrays.asList(Row(5L, "E F")),
       StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
     assert(Dedup.featurize(two).select(size(col("sh"))).head().getInt(0) == 0,
@@ -136,7 +132,6 @@ class StandingProbeSpec extends graft.SparkSuite {
   }
 
   test("one projection: no join, no exchange, no ScalaUDF; interpreted == codegen") {
-    graft.functions.Custom.register(spark)
     // through parquet: over a local relation the optimizer would fold the
     // whole projection at plan time (ConvertToLocalRelation)
     val dir = java.nio.file.Files.createTempDirectory("graft_probe").toString

@@ -225,7 +225,6 @@ class StreamingSpec extends SparkSuite {
     // complete-mode streaming aggregation; replayed in chunks it must
     // converge to the batch estimate exactly (register-max is
     // insensitive to batch boundaries).
-    graft.functions.Custom.register(spark)
     val out = runComplete(fixtureEvs, "t_hll") { df =>
       df.groupBy(col("event_type"))
         .agg(expr("hll_distinct(user_id)").as("est"))
@@ -242,7 +241,6 @@ class StreamingSpec extends SparkSuite {
     // complete-mode streaming estimate must equal the batch estimate
     // bit-for-bit regardless of micro-batch boundaries (merge =
     // bottom-k of the union — associative/commutative/idempotent).
-    graft.functions.Custom.register(spark)
     val out = runComplete(fixtureEvs, "t_bkq") { df =>
       df.groupBy(col("event_type"))
         .agg(expr("bkq_median(value)").as("est"))
@@ -379,7 +377,6 @@ class StreamingSpec extends SparkSuite {
     val finals = spark.table("t_hll_state")
       .groupBy($"event_type").agg(max($"est").as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    graft.functions.Custom.register(spark)
     val expected = evDf(evs).groupBy($"event_type")
       .agg(expr("hll_distinct(user_id)").as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -525,7 +522,6 @@ class StreamingSpec extends SparkSuite {
     // exactly. The cross-batch dedup state runs on RocksDB (asserted via
     // provider-specific metrics, not just the conf).
     withRocksDB(true) {
-      graft.functions.Custom.register(spark)
       val tmp = java.nio.file.Files.createTempDirectory("graft_ingest").toString
       val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val docs = Tables.documents(spark, sf)
@@ -572,7 +568,6 @@ class StreamingSpec extends SparkSuite {
     // verdicted exactly once, and the union equal to the one-shot batch
     // funnel on the full split.
     withRocksDB(true) {
-      graft.functions.Custom.register(spark)
       val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_rs").toString
       val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val docs = Tables.documents(spark, sf)
