@@ -48,15 +48,15 @@ object SpillProbe {
         case Some(fn) =>
           val before = snap(); peakMem.set(0L)
           val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
+          // a noop write runs the full plan (count() prunes columns and sorts)
+          val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
                    catch { case e: Throwable =>
                      System.err.println(s"[spill] $k FAILED: ${e.getMessage}")
                      false }
           val sec = (System.nanoTime() - t0) / 1e9
-          // listener events drain asynchronously; give the bus a moment
-          // (listenerBus is private[spark] — a bounded sleep is enough
-          // for a diagnostic tool)
-          Thread.sleep(500)
+          // listener events drain asynchronously: wait until every task
+          // end is delivered, so none lands in the next key's deltas
+          org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
           val d = snap().zip(before).map { case (a, b) => a - b }
           println(f"""{"key":"$k","ok":$ok,"sec":$sec%.3f,"mem_spill":${d(0)},"disk_spill":${d(1)},"shuffle_read_b":${d(2)},"shuffle_write_b":${d(3)},"shuffle_read_rec":${d(4)},"shuffle_write_rec":${d(5)},"peak_exec_mem":${peakMem.get}}""")
         case None => System.err.println(s"[spill] unknown key: $k")

@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.{Q, Tables}
 import graft.functions.StandingProbe
+import graft.operators.PairJoin
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2h + driver mandate — deduplication family over `documents`:
@@ -85,26 +86,23 @@ object Dedup {
                                         dir: String) =
     fullIndexPairsOf(shingled(s, dir))
 
+  /** The full inverted index of a (doc_id, lang, sh) shingle table: one
+    * (lang, doc_id, n, tok) posting per distinct shingle, n = |sh|. */
+  private[llm] def postings(shingles: org.apache.spark.sql.DataFrame) =
+    shingles.withColumn("n", size(col("sh")))
+      .select(col("lang"), col("doc_id"), col("n"), explode(col("sh")).as("tok"))
+
   /** [[fullIndexNearPairs]] parameterized on an arbitrary
     * (doc_id, lang, sh) shingle table — lets the adversarial-skew spec
     * drive both plans over a boilerplate-injected corpus. */
-  private[graft] def fullIndexPairsOf(shingles: org.apache.spark.sql.DataFrame) = {
-    val sized = shingles.withColumn("n", size(col("sh")))
-    val ex = sized.select(col("lang"), col("doc_id"), col("n"),
-                          explode(col("sh")).as("tok"))
-    val a = ex.select(col("lang"), col("doc_id").as("id_a"),
-                      col("n").as("n_a"), col("tok"))
-    val b = ex.select(col("lang").as("lang_b"), col("doc_id").as("id_b"),
-                      col("n").as("n_b"), col("tok").as("tok_b"))
-    a.join(b, col("lang") === col("lang_b") && col("tok") === col("tok_b") &&
-              col("id_a") < col("id_b"))
+  private[graft] def fullIndexPairsOf(shingles: org.apache.spark.sql.DataFrame) =
+    PairJoin.candidates(postings(shingles), Seq("lang", "tok"), "doc_id", Seq("n"))
       .groupBy(col("lang"), col("id_a"), col("id_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("n_inter"))
       .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
       .withColumn("jac", (col("n_inter").cast("decimal(18,6)") /
                           col("n_union")).cast("decimal(18,6)"))
       .filter(col("jac") >= 0.3)
-  }
 
   /** PPJoin prefix-filtered near-pair plan, un-memoized (the shared
     * memoized stage is [[nearPairs]]): candidate pairs come only from
@@ -128,15 +126,16 @@ object Dedup {
     prefixPairsOf(shingled(s, dir))
 
   /** The PPJoin PREFIX INDEX of a (doc_id, lang, sh) shingle table: only
-    * each doc's first n - ceil(0.3n) + 1 shingles under the global
-    * rarest-first (df, tok) order post to it. Split out so the
-    * adversarial-skew spec can measure Σ df² of exactly the posting
-    * lists the candidate join consumes. */
+    * each doc's first n - ceil(0.29999n) + 1 shingles under the global
+    * rarest-first (df, tok) order post to it. 0.29999 is τ = 0.3 less the
+    * slack the length and positional filters carry (the declared filter
+    * compares the HALF_UP round-6 Jaccard, so a kept pair's true ratio
+    * can be 0.2999995; a bare ceil(0.3n) cut loses such pairs from ~2M
+    * shingles up). Exact BIGINT arithmetic, equal to ceil(3n/10) for
+    * n < 10,000. Split out so the adversarial-skew spec can measure
+    * Σ df² of exactly the posting lists the candidate join consumes. */
   private[graft] def prefixIndexOf(shingles: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val sized = shingles.withColumn("n", size(col("sh")))
-    val ex = sized.select(col("lang"), col("doc_id"), col("n"),
-                          explode(col("sh")).as("tok"))
     // df rides ONE exchange of the exploded table: an unbounded count
     // window on (lang, tok). The previous groupBy + equi-join-back
     // spelling shuffled the SAME exploded table twice more (once into
@@ -147,11 +146,11 @@ object Dedup {
     // on one task either way (window group here, SMJ stream group
     // before), and the prefix filter's Σ df² defense is downstream of
     // this stage (PrefixJoinSpec pins it).
-    ex.withColumn("df", count(lit(1)).over(
+    postings(shingles).withColumn("df", count(lit(1)).over(
         Window.partitionBy(col("lang"), col("tok"))))
       .withColumn("pos", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))))
-      .filter(col("pos") <= expr("n - ((3 * n + 9) div 10) + 1"))
+      .filter(col("pos") <= expr("n - ((29999L * n + 99999) div 100000) + 1"))
       // n and pos ride along (two ints per posting) so the candidate
       // join can apply the PPJoin LENGTH and POSITIONAL filters without
       // touching the arrays. pos is the token's rank within the doc's
@@ -163,12 +162,10 @@ object Dedup {
   /** The distinct PPJoin candidate pair set (lang, id_a, id_b) of a
     * shingle table: prefix-index collisions surviving the LENGTH and
     * POSITIONAL filters (Bayardo et al. WWW'07 §3.1, Xiao et al.
-    * VLDB'08 "PPJoin"), r16 — both live INSIDE the join condition so
-    * incompatible candidates die in the hash-join probe; only survivors
-    * reach the distinct and the two array-attaching verification joins
-    * in [[prefixPairsOf]]. At 100 TB those joins move the shingle-array
-    * payload, so every candidate pruned here is a pair of arrays never
-    * shuffled (guide §2.1/§3.2). Measured at sf0.1: 136,544 → 57,206
+    * VLDB'08 "PPJoin"), r16 — both are the [[PairJoin]]'s `on`, so only
+    * survivors reach the distinct and the shingle-array attach in
+    * [[prefixPairsOf]]: every candidate pruned here is a pair of arrays
+    * never shuffled (guide §2.1/§3.2). Measured at sf0.1: 136,544 → 57,206
     * distinct candidate pairs (−58%). Losslessness of both is pinned by
     * PrefixJoinSpec: row-exact output equality against the unfiltered
     * full-index twin (fixture + adversarial boilerplate corpus) plus a
@@ -191,32 +188,20 @@ object Dedup {
     * always among the collisions and always passes; distinct() needs
     * exactly one surviving row per pair. Collision rows on non-minimal
     * common tokens may be pruned freely — they are redundant. */
-  private[graft] def prefixCandidatesOf(shingles: org.apache.spark.sql.DataFrame) = {
-    val pre = prefixIndexOf(shingles)
-    pre.select(col("lang"), col("tok"), col("doc_id").as("id_a"),
-               col("n").as("pn_a"), col("pos").as("pos_a"))
-      .join(pre.select(col("lang").as("lang_b"), col("tok").as("tok_b"),
-                       col("doc_id").as("id_b"), col("n").as("pn_b"),
-                       col("pos").as("pos_b")),
-            col("lang") === col("lang_b") && col("tok") === col("tok_b") &&
-            col("id_a") < col("id_b") &&
-            col("pn_a") * 100000L >= col("pn_b") * 29999L &&
-            col("pn_b") * 100000L >= col("pn_a") * 29999L &&
-            (least(col("pn_a") - col("pos_a"), col("pn_b") - col("pos_b"))
-               + 1) * 129999L >= (col("pn_a") + col("pn_b")) * 29999L)
-      .select(col("lang"), col("id_a"), col("id_b"))
-      .distinct()
-  }
+  private[graft] def prefixCandidatesOf(shingles: org.apache.spark.sql.DataFrame) =
+    PairJoin.candidates(prefixIndexOf(shingles), Seq("lang", "tok"), "doc_id",
+      Seq("n", "pos"),
+      on = Some(col("n_a") * 100000L >= col("n_b") * 29999L &&
+                col("n_b") * 100000L >= col("n_a") * 29999L &&
+                (least(col("n_a") - col("pos_a"), col("n_b") - col("pos_b"))
+                   + 1) * 129999L >= (col("n_a") + col("n_b")) * 29999L),
+      distinct = Seq("lang"))
 
   /** [[prefixNearPairs]] parameterized on an arbitrary (doc_id, lang, sh)
     * shingle table (see [[fullIndexPairsOf]]). */
-  private[graft] def prefixPairsOf(shingles: org.apache.spark.sql.DataFrame) = {
-    val sized = shingles.withColumn("n", size(col("sh")))
-    prefixCandidatesOf(shingles)
-      .join(sized.select(col("doc_id").as("id_a"), col("sh").as("sh_a"),
-                         col("n").as("n_a")), Seq("id_a"))
-      .join(sized.select(col("doc_id").as("id_b"), col("sh").as("sh_b"),
-                         col("n").as("n_b")), Seq("id_b"))
+  private[graft] def prefixPairsOf(shingles: org.apache.spark.sql.DataFrame) =
+    PairJoin.attach(prefixCandidatesOf(shingles),
+                    shingles.withColumn("n", size(col("sh"))), "doc_id", Seq("sh", "n"))
       .withColumn("n_inter",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
@@ -225,7 +210,6 @@ object Dedup {
       .filter(col("jac") >= 0.3)
       .select(col("lang"), col("id_a"), col("id_b"), col("n_a"), col("n_b"),
               col("n_inter"), col("n_union"), col("jac"))
-  }
 
   /** Near-dup pairs (3-shingle Jaccard ≥ 0.3 within lang) — the SHARED
     * pair table behind llm_dedup_near, llm_minhash_recall, the component
@@ -299,21 +283,12 @@ object Dedup {
 
   /** MinHash+LSH candidate pairs (lang, id_a, id_b), distinct across
     * band collisions — shared by llm_dedup_minhash and the recall probe.
-    * 16 md5-derived permutations, 4 bands of 4; the bucket join carries
-    * only (lang, band, bsig, doc_id). */
+    * 16 md5-derived permutations, 4 bands of 4; a [[PairJoin]] blocked
+    * on (lang, band, bsig) that carries no payload. */
   private[llm] def minhashCands(s: org.apache.spark.sql.SparkSession,
-                                dir: String) = {
-    val bands = minhashBands(s, dir)
-    val a = bands.select(col("lang"), col("band"), col("bsig"),
-                         col("doc_id").as("id_a"))
-    val b = bands.select(col("lang").as("lang_b"), col("band").as("band_b"),
-                         col("bsig").as("bsig_b"), col("doc_id").as("id_b"))
-    a.join(b,
-        col("lang") === col("lang_b") && col("band") === col("band_b") &&
-        col("bsig") === col("bsig_b") && col("id_a") < col("id_b"))
-      .select(col("lang"), col("id_a"), col("id_b"))
-      .distinct() // a pair may collide in several bands
-  }
+                                dir: String) =
+    PairJoin.candidates(minhashBands(s, dir), Seq("lang", "band", "bsig"), "doc_id",
+                        distinct = Seq("lang"))
 
   /** DuckDB spelling of the MinHash candidate set, as a CTE-list fragment
     * ending in `mh_cand(lang, id_a, id_b)`. Expects an `s(doc_id, lang,
@@ -392,17 +367,11 @@ object Dedup {
     // even the banding has a DuckDB oracle twin.
     "llm_dedup_minhash" -> Q(
       (s, dir) => {
-        // Candidate generation lives in minhashCands (one codegen pass
-        // per doc for all 16 signatures; the bucket join carries only
-        // (lang, band, bsig, doc_id) — shingle arrays stay out of the
-        // shuffle and the distinct, candidates re-join them by id. At
-        // 100 TB the band-signature is the partition key and that join
-        // is the only corpus-wide shuffle.)
-        val sh = shingled(s, dir)
-        val cand = minhashCands(s, dir)
-        cand
-          .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-          .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+        // Candidates: minhashCands (one codegen pass per doc for all 16
+        // signatures, a PairJoin on the bucket key — at 100 TB the only
+        // corpus-wide shuffle). Shingle arrays stay out of it and the
+        // distinct; PairJoin.attach joins them by id.
+        PairJoin.attach(minhashCands(s, dir), shingled(s, dir), "doc_id", Seq("sh"))
           .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
           .withColumn("jac", (col("n_inter").cast("decimal(18,6)") /
             (size(col("sh_a")) + size(col("sh_b")) - col("n_inter"))).cast("decimal(18,6)"))
@@ -549,23 +518,14 @@ object Dedup {
                              shiftright(simhash, element_at(array(0, 7, 14, 20, 26), b + 1))
                                & CASE WHEN b <= 1 THEN 127L ELSE 63L END AS bval))"""))
               .as("bb"))
-          .select(col("doc_id"), col("lang"), col("simhash"),
+          .select(col("doc_id"), col("lang"), col("simhash").as("sh"),
                   col("bb.band").as("band"), col("bb.bval").as("bval"))
-        val a = banded.select(col("lang"), col("band"), col("bval"),
-                              col("doc_id").as("id_a"), col("simhash").as("sh_a"))
-        val b = banded.select(col("lang").as("lang_b"), col("band").as("band_b"),
-                              col("bval").as("bval_b"),
-                              col("doc_id").as("id_b"), col("simhash").as("sh_b"))
-        // hd <= 4 lives INSIDE the join condition: Spark evaluates non-equi
-        // predicates during the hash-join probe, so the Σ bucket² candidate
-        // rows die in the join operator instead of being materialized and
-        // shuffled through distinct(). r2 shape (distinct-then-filter)
-        // shuffled every candidate; this shuffles only true near-dups.
-        a.join(b, col("lang") === col("lang_b") && col("band") === col("band_b") &&
-                  col("bval") === col("bval_b") && col("id_a") < col("id_b") &&
-                  bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= 4)
-          .select(col("lang"), col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
-          .distinct() // a surviving pair may share several bands
+        // hd <= 4 lives INSIDE the join condition, so the Σ bucket²
+        // candidate rows die in the join operator; only true near-dups
+        // reach the distinct (a surviving pair may share several bands).
+        PairJoin.candidates(banded, Seq("lang", "band", "bval"), "doc_id", Seq("sh"),
+            on = Some(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= 4),
+            distinct = Seq("lang", "sh_a", "sh_b"))
           .withColumn("hd", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
           .orderBy(col("lang"), col("id_a"), col("id_b"))
       },
@@ -647,9 +607,10 @@ object Dedup {
     // Σ df² to Σ df_prefix² — the 100 TB win over llm_dedup_near's full
     // inverted index, with zero recall loss (PrefixJoinSpec pins output
     // equality against the full-index plan and the candidate-count
-    // strict reduction). ceil(3n/10) is exact integer arithmetic
-    // ((3n + 9) div 10) — a float 0.3*n would mis-round the prefix
-    // boundary at multiples of 10 and silently drop true pairs. The
+    // strict reduction). The cut uses tau = 0.29999 (the round-6 slack
+    // of the declared 0.3 filter, see prefixIndexOf) in exact integer
+    // arithmetic ((29999n + 99999) div 100000) — a float tau*n would
+    // mis-round the prefix boundary and silently drop true pairs. The
     // per-doc prefix ranking windows on doc_id (corpus-cardinality key,
     // scale-safe); the df table joins on (lang, tok) — the same shuffle
     // key the explode already produced. Oracle: the dense self-join (the

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
+import graft.operators.PairJoin
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,12 +29,6 @@ object Screens {
     s"""list_distinct(list_transform(generate_series(1, len($duckToks) - 2),
         i -> $duckToks[i] || ' ' || $duckToks[i+1] || ' ' || $duckToks[i+2]))"""
 
-  /** (doc_id, lang, sh) — the SAME memoized pipeline stage as
-    * [[Dedup.shingled]] (one localCheckpoint per session+dataset shared
-    * by containment/novelty/dup_degree and the whole dedup family). */
-  private def shingled(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Dedup.shingled(s, dir)
-
   val qs: Seq[(String, Q)] = Seq(
 
     // Asymmetric containment C(a ⊂ b) = |sh(a) ∩ sh(b)| / |sh(a)| — the
@@ -45,15 +40,8 @@ object Screens {
     // formulation — DuckDB only verifies at sf0.01.
     "llm_containment" -> Q(
       (s, dir) => {
-        val sized = shingled(s, dir).withColumn("n", size(col("sh")))
-        val ex = sized.select(col("lang"), col("doc_id"), col("n"),
-                              explode(col("sh")).as("tok"))
-        val a = ex.select(col("lang"), col("doc_id").as("id_a"),
-                          col("n").as("n_a"), col("tok"))
-        val b = ex.select(col("lang").as("lang_b"), col("doc_id").as("id_b"),
-                          col("tok").as("tok_b"))
-        a.join(b, col("lang") === col("lang_b") && col("tok") === col("tok_b") &&
-                  col("id_a") =!= col("id_b"))
+        PairJoin.candidates(Dedup.postings(Dedup.shingled(s, dir)), Seq("lang", "tok"),
+                            "doc_id", Seq("n"), asymmetric = true)
           .groupBy(col("lang"), col("id_a"), col("id_b"), col("n_a"))
           .agg(count(lit(1)).as("n_inter"))
           .withColumn("cont", (col("n_inter").cast("decimal(18,6)") /
@@ -85,7 +73,7 @@ object Screens {
     // slice a curation pipeline drops or downweights.
     "llm_novelty" -> Q(
       (s, dir) => {
-        val ex = shingled(s, dir)
+        val ex = Dedup.shingled(s, dir)
           .select(col("doc_id"), explode(col("sh")).as("tok"))
         val first = ex.groupBy(col("tok")).agg(min(col("doc_id")).as("first_id"))
         ex.join(first, Seq("tok"))
@@ -199,19 +187,11 @@ object Screens {
         val nrm = w.groupBy(col("doc_id"))
           .agg(sqrt(sum(expr("CAST(round(w * w, 6) AS DECIMAL(28,6))"))
                       .cast("double")).as("nrm"))
-        val a = w.select(col("lang"), col("tok"), col("doc_id").as("id_a"),
-                         col("w").as("w_a"))
-        val b = w.select(col("lang").as("lang_b"), col("tok").as("tok_b"),
-                         col("doc_id").as("id_b"), col("w").as("w_b"))
-        a.join(b, col("lang") === col("lang_b") && col("tok") === col("tok_b") &&
-                  col("id_a") < col("id_b"))
+        val dots = PairJoin.candidates(w, Seq("lang", "tok"), "doc_id", Seq("w"))
           .groupBy(col("lang"), col("id_a"), col("id_b"))
           .agg(sum(expr("CAST(round(w_a * w_b, 6) AS DECIMAL(28,6))"))
                  .cast("double").as("dot"))
-          .join(nrm.withColumnRenamed("doc_id", "id_a")
-                   .withColumnRenamed("nrm", "nrm_a"), Seq("id_a"))
-          .join(nrm.withColumnRenamed("doc_id", "id_b")
-                   .withColumnRenamed("nrm", "nrm_b"), Seq("id_b"))
+        PairJoin.attach(dots, nrm, "doc_id", Seq("nrm"))
           .withColumn("cos", round(col("dot") / (col("nrm_a") * col("nrm_b")), 6))
           .filter(col("cos") >= 0.3)
           .select(col("lang"), col("id_a"), col("id_b"), col("cos"))

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
+import graft.operators.PairJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -54,10 +55,9 @@ object Similarity {
     * weak pruning (inherent: a τ-0.2 all-pairs OUTPUT is itself ~6% of all
     * pairs, so no exact method is subquadratic here). At dedup-grade
     * thresholds (τ = 0.9 → 25.8°, 7 bands; τ = 0.99 → 8.1°, 22 bands) the
-    * same plan prunes hard. The B side ships only (label, probe, id) —
-    * 3 small rows per vector, never 3 copies of the embedding; payloads
-    * re-attach by id after the candidate join, exactly like the LSH dedup
-    * family. */
+    * same plan prunes hard. A [[PairJoin]] whose B side probes: B ships
+    * only (label, probe, id) — 3 small rows per vector, never 3 copies
+    * of the embedding — and its embedding joins by id afterwards. */
   private def cosPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val W = math.acos(0.1999) // band width with ulp margin for round(·, 6)
     val e = Tables.embeddings(s, dir)
@@ -66,20 +66,15 @@ object Similarity {
         least(greatest(element_at(col("embedding"), 1) / col("nrm"), lit(-1.0)),
               lit(1.0))))
       .withColumn("band", floor(col("theta") / W))
-    val a = e.select(col("label"), col("band"), col("vec_id").as("id_a"),
-                     col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
-    val probes = e.select(col("label").as("label_b"), col("vec_id").as("id_b"),
-                          explode(array(col("band") - 1, col("band"),
-                                        col("band") + 1)).as("probe"))
-    a.join(probes, col("label") === col("label_b") && col("band") === col("probe") &&
-                   col("id_a") < col("id_b"))
-      .select(col("label"), col("id_a"), col("id_b"), col("emb_a"), col("nrm_a"))
+    PairJoin.candidates(e, Seq("label", "band"), "vec_id", Seq("embedding", "nrm"),
+                        probe = PairJoin.B)
+      .select(col("label"), col("id_a"), col("id_b"), col("embedding_a"), col("nrm_a"))
       .join(Tables.embeddings(s, dir).withColumn("nrm_b", expr(normE))
-              .select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
+              .select(col("vec_id").as("id_b"), col("embedding").as("embedding_b"),
                       col("nrm_b")),
             Seq("id_b"))
       .withColumn("cos", round(
-        expr(dotE("emb_a", "emb_b")) / (col("nrm_a") * col("nrm_b")), 6))
+        expr(dotE("embedding_a", "embedding_b")) / (col("nrm_a") * col("nrm_b")), 6))
       .filter(col("cos") >= 0.2)
       .select(col("label"), col("id_a"), col("id_b"), col("cos"))
   }
@@ -618,35 +613,12 @@ object Similarity {
     // linkage use: a pair survives only when each side is the OTHER's
     // best candidate, which kills the hub problem (one popular vector
     // soaking up many best-of links can be kept by at most one of them).
-    // Work shape: ONE banded cosPairs pass (never two — the symmetric
-    // orientation is an in-row 2-element explode), a per-source top-1
-    // window on the candidate table (map-side prunable via
-    // WindowGroupLimit), and a best⋈best equi-join on the |ids|-row
-    // reduced table. Ranks break ties on (cos desc, dst), both engines.
+    // Work shape: ONE banded cosPairs pass into PairJoin.mutualBest (an
+    // in-row symmetrize, a per-source top-1 window that WindowGroupLimit
+    // prunes map-side, a best⋈best join on |ids| rows). Ranks break ties
+    // on (cos desc, dst), both engines.
     "llm_mutual_nn" -> Q(
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val sym = cosPairs(s, dir)
-          .select(col("cos"), explode(array(
-            struct(col("id_a").as("src"), col("id_b").as("dst")),
-            struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"), col("cos"))
-        val w = Window.partitionBy(col("src"))
-          .orderBy(col("cos").desc, col("dst"))
-        // best feeds both sides of the mutuality self-join — materialize
-        // the per-src top-1 table once (r15)
-        val best = graft.llm.Memo.cut(s)(
-          sym.withColumn("rk", row_number().over(w))
-          .filter(col("rk") === 1)
-          .select(col("src"), col("dst"), col("cos")))
-        best.as("x")
-          .join(best.as("y"),
-                col("x.src") === col("y.dst") && col("x.dst") === col("y.src")
-                  && col("x.src") < col("x.dst"))
-          .select(col("x.src").as("id_a"), col("x.dst").as("id_b"),
-                  col("x.cos").as("cos"))
-          .orderBy(col("id_a"))
-      },
+      (s, dir) => PairJoin.mutualBest(cosPairs(s, dir)).orderBy(col("id_a")),
       Some(s"""WITH n AS (SELECT vec_id, label, embedding, $duckNorm AS nrm
                           FROM embeddings),
                     p AS (SELECT * FROM (
@@ -687,11 +659,10 @@ object Similarity {
     // ADJACENT in the sort, so the window keeps exactly the pairs the
     // mutual filter can ever emit; recall vs the exact key is MEASURED
     // (graft.MnnRecall; BASELINE "llm_mutual_nn_snm measured recall
-    // r13"), not assumed. Ids explode W-wide, payloads re-attach by id
-    // (the cosPairs discipline — never duplicate a 64-float vector 16×).
+    // r13"), not assumed. PairJoin.neighbors pairs ids only; payloads
+    // attach after the distinct (never copy a 64-float vector 16×).
     "llm_mutual_nn_snm" -> Q(
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val W = 24; val P = 8 // window per pass; projection passes
         val e = Tables.embeddings(s, dir)
           .withColumn("nrm", expr(normE))
@@ -705,58 +676,14 @@ object Similarity {
           .withColumn("sk", round(
             element_at(col("embedding"), col("j")) / col("nrm"), 6))
           .select(col("vec_id"), col("label"), col("j"), col("sk"))
-        val rw = Window.partitionBy(col("label"), col("j"))
-          .orderBy(col("sk"), col("vec_id"))
-        // ONE materialized rank table (r15): r feeds both neighborhood
-        // join sides — left declarative each side re-ran the projection
-        // explode + P sort-window passes (8 parquet scans in the r14
-        // plan). Memo.cut materializes it once, BEFORE the W-fold
-        // neighbor explode.
-        val r = graft.llm.Memo.cut(s)(
-          proj.withColumn("rn", row_number().over(rw)))
-        val aIdx = r.select(col("label").as("lbl"), col("j"),
-                            col("vec_id").as("ka"), col("rn"))
-          .withColumn("k", explode(expr(s"sequence(1, $W)")))
-          .withColumn("rn_b", col("rn") + col("k"))
-          .drop("rn", "k")
-        val bIdx = r.select(col("label").as("lbl_b"), col("j").as("j_b"),
-                            col("vec_id").as("kb"), col("rn").as("rnb"))
-        val payload = e.select(col("vec_id"), col("embedding"), col("nrm"))
-        val cand = aIdx.join(bIdx,
-            col("lbl") === col("lbl_b") && col("j") === col("j_b") &&
-              col("rn_b") === col("rnb"))
-          .select(least(col("ka"), col("kb")).as("ka"),
-                  greatest(col("ka"), col("kb")).as("kb"))
+        val ids = PairJoin.neighbors(proj, Seq("label", "j"), "sk", "vec_id", W)
           .distinct()
-          .join(payload.select(col("vec_id").as("ka"),
-                               col("embedding").as("ea"), col("nrm").as("na")),
-                Seq("ka"))
-          .join(payload.select(col("vec_id").as("kb"),
-                               col("embedding").as("eb"), col("nrm").as("nb")),
-                Seq("kb"))
+        val cand = PairJoin.attach(ids, e, "vec_id", Seq("embedding", "nrm"))
           .withColumn("cos", round(
-            expr(dotE("ea", "eb")) / (col("na") * col("nb")), 6))
+            expr(dotE("embedding_a", "embedding_b")) / (col("nrm_a") * col("nrm_b")), 6))
           .filter(col("cos") >= 0.2)
-          .select(col("ka"), col("kb"), col("cos"))
-        val sym = cand.select(col("cos"), explode(array(
-            struct(col("ka").as("src"), col("kb").as("dst")),
-            struct(col("kb").as("src"), col("ka").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"), col("cos"))
-        val w = Window.partitionBy(col("src"))
-          .orderBy(col("cos").desc, col("dst"))
-        val best = sym.withColumn("rk", row_number().over(w))
-          .filter(col("rk") === 1)
-          .select(col("src"), col("dst"), col("cos"))
-        // best feeds both sides of the mutuality self-join — materialize
-        // the per-src top-1 table once (r15)
-        val bestC = graft.llm.Memo.cut(s)(best)
-        bestC.as("x")
-          .join(bestC.as("y"),
-                col("x.src") === col("y.dst") && col("x.dst") === col("y.src")
-                  && col("x.src") < col("x.dst"))
-          .select(col("x.src").as("id_a"), col("x.dst").as("id_b"),
-                  col("x.cos").as("cos"))
-          .orderBy(col("id_a"))
+          .select(col("id_a"), col("id_b"), col("cos"))
+        PairJoin.mutualBest(cand).orderBy(col("id_a"))
       },
       Some(s"""WITH n AS (SELECT vec_id, label, embedding, $duckNorm AS nrm
                           FROM embeddings),
@@ -864,23 +791,14 @@ object Similarity {
           .agg(round(sum(expr(
                  "CAST(round(CAST(v AS DOUBLE) * cv, 12) AS DECIMAL(38,12))"))
                .cast("double"), 6).as("csim"))
-        val a = e.select(col("bucket"), col("vec_id").as("id_a"),
-                         col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
-        val b = e.select(col("bucket"), col("vec_id").as("id_b"),
-                         col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
-        val pairs = a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-          .withColumn("cos", round(
-            expr(dotE("emb_a", "emb_b")) / (col("nrm_a") * col("nrm_b")), 6))
-          .filter(col("cos") >= 0.2)
+        val pairs = PairJoin.candidates(e, Seq("bucket"), "vec_id", Seq("embedding", "nrm"),
+            on = Some(round(expr(dotE("embedding_a", "embedding_b")) /
+                            (col("nrm_a") * col("nrm_b")), 6) >= 0.2))
           .select(col("bucket"), col("id_a"), col("id_b"))
-        val withSim = pairs
-          .join(csim.select(col("vec_id").as("id_a"), col("csim").as("sim_a")),
-                Seq("id_a"))
-          .join(csim.select(col("vec_id").as("id_b"), col("csim").as("sim_b")),
-                Seq("id_b"))
+        val withSim = PairJoin.attach(pairs, csim, "vec_id", Seq("csim"))
           .withColumn("drop_id",
-            when(col("sim_a") > col("sim_b"), col("id_a"))
-              .when(col("sim_b") > col("sim_a"), col("id_b"))
+            when(col("csim_a") > col("csim_b"), col("id_a"))
+              .when(col("csim_b") > col("csim_a"), col("id_b"))
               .otherwise(greatest(col("id_a"), col("id_b"))))
         val dropped = withSim.select(col("bucket"), col("drop_id")).distinct()
           .groupBy(col("bucket")).agg(count(lit(1)).as("n_dropped"))

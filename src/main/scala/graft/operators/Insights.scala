@@ -33,6 +33,8 @@ object Insights {
     * Exact, therefore Σ block² (adjudicated in BASELINE §r8-sf1).
     * `corpus`' session must be installed ([[graft.Tables.configure]]). */
   private[graft] def jaroScoredOf(corpus: org.apache.spark.sql.DataFrame) = {
+    // Hand-spelled on purpose: both sides are the bare scan, and a
+    // PairJoin's suffix renames would add a Project to each.
     val c = corpus.select(col("c_custkey"), col("c_name"),
                           col("c_mktsegment"), col("c_nationkey"))
     c.as("a").join(c.as("b"),
@@ -83,50 +85,29 @@ object Insights {
     * the measured recall the spec pins. */
   private[graft] val SNM_W = 10
 
-  /** Multi-pass sorted-neighborhood CANDIDATE pairs (Hernández–Stolfo)
-    * over a (c_custkey, c_name, c_mktsegment, c_nationkey) corpus:
-    * within each (mktsegment, nationkey) block, sort once by c_name and
-    * once by reverse(c_name), compare each record only to its next `W`
-    * neighbors per pass. Linear — rows × 2W comparisons for any block
-    * size distribution. Parameterized on corpus and W so the adversarial
+  /** Multi-pass sorted-neighborhood CANDIDATE pairs over a (c_custkey,
+    * c_name, c_mktsegment, c_nationkey) corpus: two [[PairJoin.neighbors]]
+    * passes per (mktsegment, nationkey) block, by c_name and by
+    * reverse(c_name). Linear — rows × 2W comparisons for any block size
+    * distribution. Parameterized on corpus and W so the adversarial
     * recall spec (PrefixJoinSpec) can drive the SAME kernel the declared
     * fn_jaro_snm uses on a middle-edit corpus and at shrunken windows.
-    * Returns (id_a, id_b, name_a, name_b), duplicates across passes
-    * retained (callers distinct after scoring). */
+    * Returns (id_a, id_b, name_a, name_b) — names by window side, not by
+    * id order (jw is symmetric) — duplicates across passes retained. */
   private[graft] def snmCandidates(corpus: org.apache.spark.sql.DataFrame,
                                    W: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // ONE evaluation of the (possibly dedup-reduced) corpus and ONE
-    // window per pass (r15): c previously re-ran per pass per join side
-    // (4x) and each pass's rank window ran once per side (2x) — the
-    // same multi-consumer recompute class as llm_mutual_nn_snm.
+    // ONE evaluation of the (possibly dedup-reduced) corpus (r15): it
+    // feeds both passes, and each pass's rank table feeds both sides.
     val c = graft.llm.Memo.cut(corpus.sparkSession)(corpus
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
               col("c_nationkey"))
       .withColumn("rname", reverse(col("c_name"))))
-    val passes = Seq("c_name", "rname").map { sk =>
-      val w = Window.partitionBy(col("c_mktsegment"), col("c_nationkey"))
-        .orderBy(col(sk), col("c_custkey"))
-      val r = graft.llm.Memo.cut(corpus.sparkSession)(
-        c.withColumn("rn", row_number().over(w)))
-      val a = r.select(col("c_mktsegment").as("seg"),
-                       col("c_nationkey").as("nat"),
-                       col("c_custkey").as("ka"), col("c_name").as("na"),
-                       col("rn"))
-        .withColumn("k", explode(expr(s"sequence(1, $W)")))
-        .withColumn("rn_b", col("rn") + col("k"))
-        .drop("rn", "k")
-      val b = r.select(col("c_mktsegment").as("seg_b"),
-                       col("c_nationkey").as("nat_b"),
-                       col("c_custkey").as("kb"), col("c_name").as("nb"),
-                       col("rn").as("rnb"))
-      a.join(b, col("seg") === col("seg_b") && col("nat") === col("nat_b") &&
-                col("rn_b") === col("rnb"))
-        .select(least(col("ka"), col("kb")).as("id_a"),
-                greatest(col("ka"), col("kb")).as("id_b"),
-                col("na").as("name_a"), col("nb").as("name_b"))
-    }
-    passes.reduce(_ unionAll _)
+    Seq("c_name", "rname").map { sk =>
+      PairJoin.neighbors(c, Seq("c_mktsegment", "c_nationkey"), sk, "c_custkey", W,
+                         Seq("c_name"))
+        .select(col("id_a"), col("id_b"),
+                col("c_name_a").as("name_a"), col("c_name_b").as("name_b"))
+    }.reduce(_ unionAll _)
   }
 
   val qs: Seq[(String, Q)] = Seq(

@@ -584,27 +584,21 @@ object Joins {
                ORDER BY hot_key""")),
 
     // Blocked self-join: dedup candidate pairs, same lang, near-equal
-    // length. Block key is (lang, n_chars DIV 20): the probe side emits
-    // each doc under its own band plus both neighbors, the build side
-    // under its own band only, so a qualifying pair is matched EXACTLY
-    // once (at key = b's band) — no distinct needed — and candidates per
-    // block drop from |lang-block|² to 3·Σ band·band. The |len_a-len_b|
-    // <= 2 predicate stays in the join, so the banding is pure pruning:
-    // same rows as the dense spelling, never n² within a lang.
+    // length. A PairJoin on (lang, n_chars DIV 20) whose A side probes
+    // its band ± 1, so a qualifying pair meets EXACTLY once — no distinct
+    // needed — and candidates per block drop from |lang-block|² to
+    // 3·Σ band·band. The |len_a-len_b| <= 2 predicate stays in the join,
+    // so the banding is pure pruning: same rows as the dense spelling.
     "q_join_self_pairs" -> Q(
       (s, dir) => {
         val d = Tables.documents(s, dir)
           .select(col("lang"), col("doc_id"), col("n_chars"))
           .withColumn("band", floor(col("n_chars") / 20))
-        val a = d.select(col("lang"), col("doc_id").as("id_a"),
-                         col("n_chars").as("len_a"),
-                         explode(expr("array(band - 1, band, band + 1)")).as("bk"))
-        val b = d.select(col("lang").as("lang_b"), col("doc_id").as("id_b"),
-                         col("n_chars").as("len_b"), col("band").as("bk_b"))
-        a.join(b, col("lang") === col("lang_b") && col("bk") === col("bk_b") &&
-                  col("id_a") < col("id_b") &&
-                  abs(col("len_a") - col("len_b")) <= 2)
-          .select(col("lang"), col("id_a"), col("id_b"), col("len_a"), col("len_b"))
+        PairJoin.candidates(d, Seq("lang", "band"), "doc_id", Seq("n_chars"),
+            on = Some(abs(col("n_chars_a") - col("n_chars_b")) <= 2),
+            probe = PairJoin.A)
+          .select(col("lang"), col("id_a"), col("id_b"),
+                  col("n_chars_a").as("len_a"), col("n_chars_b").as("len_b"))
           .orderBy(col("lang"), col("id_a"), col("id_b"))
       },
       Some("""SELECT a.lang AS lang, a.doc_id AS id_a, b.doc_id AS id_b,

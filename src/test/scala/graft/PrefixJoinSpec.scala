@@ -50,6 +50,16 @@ class PrefixJoinSpec extends SparkSuite {
       s"prefix index ($prefixIdx) saves less than 1 posting/doc vs full ($fullIdx, $docs docs)")
   }
 
+  test("prefix cut carries the round-6 slack: 10,007 distinct shingles post 7,006 rows") {
+    // n - ceil(0.29999 n) + 1 = 10007 - 3002 + 1; the bare ceil(0.3 n)
+    // cut would post 7,005 and could lose a kept pair's minimal common
+    // shingle (see Dedup.prefixIndexOf).
+    import spark.implicits._
+    val sh = Seq((1L, "en", (0 until 10007).map(i => s"s$i").toArray))
+      .toDF("doc_id", "lang", "sh")
+    assert(graft.llm.Dedup.prefixIndexOf(sh).count() == 7006)
+  }
+
   test("prefix filter survives an adversarial boilerplate stop-shingle (df = corpus)") {
     // The r7 verdict's named scale-killer: one boilerplate shingle with
     // df = |corpus| turns the FULL inverted index's candidate join into a
