@@ -21,13 +21,20 @@ import org.apache.spark.sql.functions._
 object Tables {
   /** The one per-session install: the runtime-settable session configs
     * every entry point needs, plus the engine's native functions
-    * ([[graft.functions.Custom.functions]]). Idempotent; once the
-    * functions are present it costs one registry lookup beyond the two
-    * conf sets. [[Q.fn]] runs it before every key, so a session built
-    * elsewhere needs nothing from its caller. */
+    * ([[graft.functions.Custom.functions]]). The confs are the events
+    * `nanosAsLong` read, UTC, and the `file:` file system
+    * ([[graft.io.LocalFs]]): Hadoop's local `FileContext` forks `chmod`
+    * and `readlink` per call when libhadoop is absent, and every
+    * streaming checkpoint write (offset/commit logs, RocksDB changelogs)
+    * goes through it. Session confs reach the Hadoop conf of each
+    * checkpoint file manager and state store (`newHadoopConf`). Idempotent;
+    * once the functions are present it costs one registry lookup beyond
+    * the three conf sets. [[Q.fn]] runs it before every key, so a session
+    * built elsewhere needs nothing from its caller. */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[graft.io.LocalFs].getName)
     if (!graft.functions.Custom.registered(spark)) graft.functions.Custom.register(spark)
     spark
   }

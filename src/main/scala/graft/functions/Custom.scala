@@ -95,8 +95,8 @@ object Custom {
 
   /** Registers [[functions]] in the session's function registry
     * (idempotent). Sessions get it from [[Tables.configure]], the one
-    * install every key passes through ([[Q.fn]]); the streaming
-    * micro-batch clone re-registers directly. */
+    * install every key and the streaming micro-batch clone pass
+    * through ([[Q.fn]]). */
   def register(spark: SparkSession): SparkSession = {
     val reg = registry(spark)
     functions.foreach { case (name, builder) =>

@@ -516,9 +516,9 @@ object Streams {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // the micro-batch session is a clone — re-register the kernels
-        // (idempotent) so featurize's tid60/shingles3 resolve
-        graft.functions.Custom.register(batch.sparkSession)
+        // the micro-batch session is a clone — install it (one registry
+        // lookup when the kernels featurize needs are already there)
+        graft.Tables.configure(batch.sparkSession)
         graft.llm.Dedup.ingestVerdicts(
             graft.llm.Dedup.featurize(batch.drop("ingest_ts")), idx)
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")

@@ -65,6 +65,7 @@ class SessionSpec extends SparkSuite {
     assert(Custom.functions.map(_._1).forall(bare.catalog.functionExists))
     assert(bare.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(bare.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(bare.conf.get("fs.AbstractFileSystem.file.impl") == classOf[graft.io.LocalFs].getName)
     val before = functionNames(bare)
     Tables.configure(bare)
     assert(functionNames(bare) == before)

@@ -520,9 +520,13 @@ class StreamingSpec extends SparkSuite {
     // 3-file stream against the standing (even) features, verdicts per
     // micro-batch — must reproduce the one-shot batch funnel rows
     // exactly. The cross-batch dedup state runs on RocksDB (asserted via
-    // provider-specific metrics, not just the conf).
-    withRocksDB(true) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    // provider-specific metrics, not just the conf), with changelog
+    // checkpointing as the funnel runs in production (StreamBench).
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    spark.conf.set(changelog, "true")
+    try withRocksDB(true) {
+      val tmpDir = java.nio.file.Files.createTempDirectory("graft_ingest")
+      val tmp = tmpDir.toString
       val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val docs = Tables.documents(spark, sf)
       docs.filter(col("doc_id") % 2 =!= 0).repartition(3).write.parquet(inDir)
@@ -532,7 +536,28 @@ class StreamingSpec extends SparkSuite {
       val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
       val q = Streams.ingestFunnel(spark, inDir, docs.schema, standFeat,
                                    outDir, ckpt)
-      try { q.processAllAvailable(); assertRocksDBEngaged(q) } finally q.stop()
+      // Checkpoint I/O starts no process (graft.io.LocalFs, installed by
+      // Tables.configure): no started command may name the checkpoint dir.
+      val forks = graft.io.ProcessStarts.during {
+        try { q.processAllAvailable(); assertRocksDBEngaged(q) } finally q.stop()
+      }.filter(_.contains(s"${tmpDir.getFileName}/ckpt"))
+      assert(forks.isEmpty, s"${forks.size} processes named the checkpoint, e.g. ${forks.take(3)}")
+      // ...and still writes Hadoop's .crc sibling beside every log entry
+      // and state changelog.
+      import java.nio.file.Files
+      import scala.jdk.CollectionConverters._
+      val logged = Files.walk(java.nio.file.Paths.get(ckpt))
+      val entries = try logged.iterator().asScala.toList.filter { p =>
+        val dir = p.getParent.getFileName.toString; val name = p.getFileName.toString
+        !name.startsWith(".") && Files.isRegularFile(p) &&
+          (dir == "offsets" || dir == "commits" || name.endsWith(".changelog"))
+      } finally logged.close()
+      assert(entries.count(_.toString.endsWith(".changelog")) > 0 &&
+               entries.count(_.getParent.getFileName.toString == "commits") >= 3,
+             s"checkpoint lacks changelogs or commits: ${entries.mkString(", ")}")
+      val noCrc = entries.filterNot(p =>
+        Files.isRegularFile(p.resolveSibling(s".${p.getFileName}.crc")))
+      assert(noCrc.isEmpty, s"entries without a .crc sibling: ${noCrc.mkString(", ")}")
       // State rows: each micro-batch's verdicts are ONE job over the
       // batch, so the dedup state holds exactly one row per distinct
       // incoming doc. A second job over the batch frame re-executes the
@@ -557,7 +582,7 @@ class StreamingSpec extends SparkSuite {
         .collect().map(_.getString(0)).toSet
       assert(verdicts.contains("novel_fastpath") || verdicts.contains("admitted"),
         s"no admitted docs at all — fixture degenerate? saw $verdicts")
-    }
+    } finally spark.conf.unset(changelog)
   }
 
   test("st_ingest_funnel: checkpoint restart — new wave picked up once, no re-verdicts") {
