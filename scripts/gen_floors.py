@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
 """Consolidate BASELINE.md's '## Bench minima <tag>' sections into
 BENCH_FLOORS.json — the single floor map graft.Bench reads at runtime
-for its contended-capture self-rescue (r10 VERDICT #1).
+for its `contended` verdict and `floor_sum_ratio` (r10 VERDICT #1).
 
 Floor = per-key MINIMUM across every minima section (the engine's
-demonstrated capability on this host; a too-tight floor only costs an
-extra re-time, never a wrong number — rescue emits best-of-observed).
+demonstrated capability on this host; a too-tight floor can only flag a
+capture `contended`, never change a reported time — Bench re-times
+nothing on what the floors say).
 
 Sentinel leg floors (cpu/io) ride along under "sentinel_cpu"/"sentinel_io":
 pass them explicitly (--sentinel-cpu / --sentinel-io) to update, else the

@@ -1,5 +1,6 @@
 package graft
 
+import graft.llm.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,21 +50,10 @@ import org.apache.spark.sql.functions._
   */
 object AnnRecall {
 
-  /** Same 4-bit hyperplane sign code as Similarity.codeE (kept textually
-    * identical so this tool measures the SHIPPED bucketing). */
-  private val codeE =
-    """CAST(CASE WHEN element_at(embedding, 1) > 0 THEN 8 ELSE 0 END +
-            CASE WHEN element_at(embedding, 2) > 0 THEN 4 ELSE 0 END +
-            CASE WHEN element_at(embedding, 3) > 0 THEN 2 ELSE 0 END +
-            CASE WHEN element_at(embedding, 4) > 0 THEN 1 ELSE 0 END AS INT)"""
-
-  /** XOR masks of the hamming ball, nearest-first (Similarity.ballMasks
-    * plus the full-flip 15 so radius 4 = everything, for reference). */
-  private val masksByRadius: Map[Int, Seq[Int]] = Map(
-    0 -> Seq(0),
-    1 -> Seq(0, 1, 2, 4, 8),
-    2 -> Seq(0, 1, 2, 4, 8, 3, 5, 6, 9, 10, 12),
-    3 -> Seq(0, 1, 2, 4, 8, 3, 5, 6, 9, 10, 12, 7, 11, 13, 14))
+  /** XOR masks of the hamming-r ball over the shipped 4-bit sign code,
+    * nearest-first: Similarity's ball cut at popcount r. */
+  private def masksByRadius(r: Int): Seq[Int] =
+    Similarity.ballMasks.filter(m => Integer.bitCount(m) <= r)
 
   /** Planted corpus + probes. Returns (corpus, probes): corpus rows are
     * (vec_id, center_id, tier, embedding, bucket); probes are the raw
@@ -92,11 +82,11 @@ object AnnRecall {
                                 CAST(m AS DOUBLE) * 7.0 +
                                 CAST(j AS DOUBLE) * 1.7) AS FLOAT))"""))
       .withColumn("vec_id", col("center_id") * 1000L + col("m"))
-      .withColumn("bucket", expr(codeE))
+      .withColumn("bucket", expr(Similarity.codeE))
       .select(col("vec_id"), col("center_id"), col("tier"),
               col("embedding"), col("bucket"))
     val probes = base
-      .withColumn("q_bucket", expr(codeE))
+      .withColumn("q_bucket", expr(Similarity.codeE))
       .select(col("center_id").as("q_center"),
               col("embedding").as("q_emb"), col("q_bucket"))
     (corpus, probes)
@@ -117,7 +107,7 @@ object AnnRecall {
     * llm_ann_partitioned key uses). */
   private def widthCurve(spark: SparkSession, dir: String, centers: Int,
                          members: Int, epsScale: Double, ws: Seq[Int]): Unit = {
-    import graft.llm.{Memo, Similarity}
+    import graft.llm.Memo
     val (corpus0, probes0) = plant(spark, dir, centers, members, epsScale)
     def withCodes(df: DataFrame, emb: String, pfx: String) = {
       val renamed = df.withColumnRenamed(emb, "embedding")

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
+import graft.llm.TextRules.{duckToks, toksE}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,9 +17,6 @@ import org.apache.spark.sql.functions._
   * streams through map-side; chunking/mixing/census are scan-pipelined
   * with at most one agg shuffle. */
 object Curation {
-
-  private val toksE = "split(lower(trim(text)), ' ')"
-  private val duckToks = "string_split(lower(trim(text)), ' ')"
 
   /** Distinct 4-token grams — the decontamination grain. Real pipelines
     * use 8-13-gram overlap; the fixture texts are short synthetic strings

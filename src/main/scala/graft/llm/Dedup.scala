@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.{Q, Tables}
 import graft.functions.StandingProbe
+import graft.llm.TextRules.{duckToks, dupPrefix, toksE}
 import graft.operators.PairJoin
 import org.apache.spark.sql.functions._
 
@@ -19,8 +20,6 @@ import org.apache.spark.sql.functions._
   * size², bounds the pair explosion. */
 object Dedup {
 
-  /** Tokens of the normalized text. */
-  private val toksE = "split(lower(trim(text)), ' ')"
   /** Distinct 3-token shingles — the near-dup grain. A tiny shared
     * vocabulary makes unigram Jaccard saturate (~24% of pairs ≥ 0.8,
     * measured); 3-gram shingles isolate the deliberately planted
@@ -43,7 +42,6 @@ object Dedup {
     * keeps). */
   private def tidE(tok: String) = s"tid60($tok)"
 
-  private val duckToks = "string_split(lower(trim(text)), ' ')"
   private val duckShingles =
     s"""list_distinct(list_transform(generate_series(1, len($duckToks) - 2),
         i -> $duckToks[i] || ' ' || $duckToks[i+1] || ' ' || $duckToks[i+2]))"""
@@ -321,14 +319,14 @@ object Dedup {
     "llm_dedup_exact" -> Q(
       (s, dir) => {
         val d = Tables.documents(s, dir)
-          .withColumn("h", sha2(expr("substr(lower(trim(text)), 1, 40)"), 256))
+          .withColumn("h", sha2(expr(dupPrefix), 256))
         d.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
           .join(d.select(col("doc_id"), col("lang"), col("n_chars")), Seq("doc_id"))
           .select(col("doc_id"), col("h"), col("lang"), col("n_chars"))
           .orderBy(col("doc_id"))
       },
-      Some("""SELECT k.doc_id, k.h, d.lang, d.n_chars
-              FROM (SELECT sha256(substr(lower(trim(text)), 1, 40)) AS h,
+      Some(s"""SELECT k.doc_id, k.h, d.lang, d.n_chars
+              FROM (SELECT sha256($dupPrefix) AS h,
                            MIN(doc_id) AS doc_id
                     FROM documents GROUP BY 1) k
               JOIN documents d ON k.doc_id = d.doc_id
@@ -848,7 +846,7 @@ object Dedup {
       Some(s"""WITH $duckCdcCtes,
                     s AS (SELECT doc_id, $duckShingles AS sh FROM documents),
                     hsh AS (SELECT doc_id,
-                                   sha256(substr(lower(trim(text)), 1, 40)) AS h
+                                   sha256($dupPrefix) AS h
                             FROM documents),
                     stand_h AS (SELECT DISTINCT h FROM hsh WHERE doc_id % 2 = 0),
                     bits AS (SELECT doc_id, tok,
@@ -952,7 +950,7 @@ object Dedup {
   private[graft] def featurize(docs: org.apache.spark.sql.DataFrame) =
     withCdcChunks(docs.withColumn("toks", expr(toksE)))
       .select(col("doc_id"),
-              sha2(expr("substr(lower(trim(text)), 1, 40)"), 256).as("h"),
+              sha2(expr(dupPrefix), 256).as("h"),
               expr("shingles3(toks)").as("sh"),
               col("chunks"))
 

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
+import graft.llm.TextRules.{duckToks, dupPrefix, toksE}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,10 +28,6 @@ object Pipeline {
     s"(tid60($x) % 1000000)"
   private def duckU(x: String) =
     s"('0x' || substr(md5($x), 1, 15))::BIGINT % 1000000"
-
-  /** Normalized token array (materialized column — never inline into
-    * higher-order lambdas, see the CSE hazard on Sketches). */
-  private val toksFunnel = "split(lower(trim(text)), ' ')"
 
   /** Connected-component labels over the near-dup pair graph: (doc_id →
     * min doc_id of its component), via min-label propagation + pointer
@@ -418,7 +415,7 @@ object Pipeline {
         val labels = clusterLabels(s, dir)
           .select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
         val quality = Tables.documents(s, dir)
-          .withColumn("toks", expr(toksFunnel))
+          .withColumn("toks", expr(toksE))
           .withColumn("n_toks", size(col("toks")))
           .withColumn("stop_ratio", (size(expr(
               "filter(toks, t -> t IN ('the', 'a', 'of', 'and', 'to', 'in'))"))
@@ -458,12 +455,12 @@ object Pipeline {
                             + (CAST(1.0 AS DECIMAL(2,1)) - short_ratio) * CAST(0.2 AS DECIMAL(2,1))
                        AS DECIMAL(18,7)) AS quality
                      FROM (SELECT doc_id,
-                             CAST(CAST(len(list_filter(string_split(lower(trim(text)), ' '),
+                             CAST(CAST(len(list_filter($duckToks,
                                  t -> t IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS DECIMAL(18,6))
-                                  / len(string_split(lower(trim(text)), ' ')) AS DECIMAL(18,6)) AS stop_ratio,
-                             CAST(CAST(len(list_filter(string_split(lower(trim(text)), ' '),
+                                  / len($duckToks) AS DECIMAL(18,6)) AS stop_ratio,
+                             CAST(CAST(len(list_filter($duckToks,
                                  t -> length(t) <= 2)) AS DECIMAL(18,6))
-                                  / len(string_split(lower(trim(text)), ' ')) AS DECIMAL(18,6)) AS short_ratio,
+                                  / len($duckToks) AS DECIMAL(18,6)) AS short_ratio,
                              CAST(least(CAST(n_chars AS DECIMAL(18,6)) / 300, 1.0)
                                   AS DECIMAL(18,6)) AS len_score
                            FROM documents)),
@@ -488,7 +485,7 @@ object Pipeline {
     // conjunction of all gates up to it.
     "llm_filter_funnel" -> Q(
       (s, dir) => Tables.documents(s, dir)
-        .withColumn("toks", expr(toksFunnel))
+        .withColumn("toks", expr(toksE))
         .withColumn("g_len", col("n_chars").between(60, 2000))
         .withColumn("g_toks", size(col("toks")) >= 10)
         .withColumn("g_stop", size(expr(
@@ -501,7 +498,7 @@ object Pipeline {
              sum(when(col("g_len") && col("g_toks") && col("g_stop"), 1L)
                .otherwise(0L)).as("pass_all"))
         .orderBy(col("lang")),
-      Some("""SELECT lang, COUNT(*) AS n_raw,
+      Some(s"""SELECT lang, COUNT(*) AS n_raw,
                      CAST(SUM(CASE WHEN g_len THEN 1 ELSE 0 END) AS BIGINT)
                        AS pass_len,
                      CAST(SUM(CASE WHEN g_len AND g_toks THEN 1 ELSE 0 END)
@@ -510,8 +507,8 @@ object Pipeline {
                               ELSE 0 END) AS BIGINT) AS pass_all
               FROM (SELECT lang,
                       n_chars BETWEEN 60 AND 2000 AS g_len,
-                      len(string_split(lower(trim(text)), ' ')) >= 10 AS g_toks,
-                      len(list_filter(string_split(lower(trim(text)), ' '),
+                      len($duckToks) >= 10 AS g_toks,
+                      len(list_filter($duckToks,
                           t -> t IN ('the', 'a', 'of', 'and', 'to', 'in'))) > 0
                         AS g_stop
                     FROM documents)
@@ -527,7 +524,7 @@ object Pipeline {
     "llm_topk_cms" -> Q(
       (s, dir) => {
         val tok = Tables.documents(s, dir)
-          .select(explode(expr("split(lower(trim(text)), ' ')")).as("tok"))
+          .select(explode(expr(toksE)).as("tok"))
         val exact = tok.groupBy(col("tok")).agg(count(lit(1)).as("n_exact"))
           .orderBy(col("n_exact").desc, col("tok")).limit(5)
         val sketchBytes = tok
@@ -550,9 +547,9 @@ object Pipeline {
         est.toDF("tok", "n_exact", "no_underestimate", "overest_in_eps")
           .orderBy(col("n_exact").desc, col("tok"))
       },
-      Some("""SELECT tok, n_exact, TRUE AS no_underestimate, TRUE AS overest_in_eps
+      Some(s"""SELECT tok, n_exact, TRUE AS no_underestimate, TRUE AS overest_in_eps
               FROM (SELECT tok, COUNT(*) AS n_exact
-                    FROM (SELECT unnest(string_split(lower(trim(text)), ' ')) AS tok
+                    FROM (SELECT unnest($duckToks) AS tok
                           FROM documents)
                     GROUP BY tok
                     ORDER BY n_exact DESC, tok
@@ -565,7 +562,7 @@ object Pipeline {
     "llm_dataset_card" -> Q(
       (s, dir) => {
         val d = Tables.documents(s, dir)
-          .withColumn("h", sha2(expr("substr(lower(trim(text)), 1, 40)"), 256))
+          .withColumn("h", sha2(expr(dupPrefix), 256))
         d.groupBy(col("lang"), col("source"))
           .agg(count(lit(1)).as("n_docs"),
                sum(col("n_chars")).as("total_chars"),
@@ -582,10 +579,10 @@ object Pipeline {
                       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
                       MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars,
                       ${graft.H.oAvg("n_chars")} AS avg_chars,
-                      COUNT(DISTINCT sha256(substr(lower(trim(text)), 1, 40)))
+                      COUNT(DISTINCT sha256($dupPrefix))
                         AS n_unique,
                       CAST(CAST(CAST(COUNT(*) - COUNT(DISTINCT
-                             sha256(substr(lower(trim(text)), 1, 40)))
+                             sha256($dupPrefix))
                            AS DECIMAL(18,6)) / COUNT(*) AS DECIMAL(18,6))
                            AS DOUBLE) AS dup_rate
                FROM documents

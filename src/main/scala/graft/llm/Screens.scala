@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
+import graft.llm.TextRules.{duckToks, toksE}
 import graft.operators.PairJoin
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,8 +24,6 @@ object Screens {
     * outputs; at deploy scale it is the executor-sizing knob. */
   val TFIDF_DF_CAP = 2000L
 
-  private val toksE = "split(lower(trim(text)), ' ')"
-  private val duckToks = "string_split(lower(trim(text)), ' ')"
   private val duckShingles =
     s"""list_distinct(list_transform(generate_series(1, len($duckToks) - 2),
         i -> $duckToks[i] || ' ' || $duckToks[i+1] || ' ' || $duckToks[i+2]))"""
@@ -271,7 +270,7 @@ object Screens {
     "llm_vocab_coverage" -> Q(
       (s, dir) => {
         val freq = Tables.documents(s, dir)
-          .selectExpr("explode(split(lower(trim(text)), ' ')) AS tok")
+          .selectExpr(s"explode($toksE) AS tok")
           .filter(length(col("tok")) > 0)
           .groupBy(col("tok")).agg(count(lit(1)).as("n"))
         val ord = Window.orderBy(col("n").desc, col("tok"))
@@ -291,8 +290,8 @@ object Screens {
                     .cast("decimal(18,6)").cast("double").as("coverage"))
           .orderBy(col("vocab_size"))
       },
-      Some("""WITH f AS (SELECT tok, COUNT(*) AS n
-                         FROM (SELECT unnest(string_split(lower(trim(text)), ' ')) AS tok
+      Some(s"""WITH f AS (SELECT tok, COUNT(*) AS n
+                         FROM (SELECT unnest($duckToks) AS tok
                                FROM documents)
                          WHERE length(tok) > 0 GROUP BY 1),
                    r AS (SELECT n,
@@ -319,7 +318,7 @@ object Screens {
       (s, dir) => {
         val pre = Tables.documents(s, dir)
           .select(col("source"), expr(
-            "concat_ws(' ', slice(split(lower(trim(text)), ' '), 1, 3))")
+            s"concat_ws(' ', slice($toksE, 1, 3))")
             .as("prefix"))
         val g = pre.groupBy(col("source"), col("prefix"))
           .agg(count(lit(1)).as("n"))
@@ -334,10 +333,10 @@ object Screens {
           .select(col("source"), col("rk"), col("prefix"), col("n"), col("share"))
           .orderBy(col("source"), col("rk"))
       },
-      Some("""WITH p AS (SELECT source,
-                                concat_ws(' ', string_split(lower(trim(text)), ' ')[1],
-                                               string_split(lower(trim(text)), ' ')[2],
-                                               string_split(lower(trim(text)), ' ')[3])
+      Some(s"""WITH p AS (SELECT source,
+                                concat_ws(' ', $duckToks[1],
+                                               $duckToks[2],
+                                               $duckToks[3])
                                   AS prefix
                          FROM documents),
                    g AS (SELECT source, prefix, COUNT(*) AS n FROM p GROUP BY 1, 2),

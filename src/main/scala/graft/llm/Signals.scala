@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
+import graft.llm.TextRules.{duckToks, toksE}
 import org.apache.spark.sql.functions._
 
 /** Round-5 per-document signal operators: winnowing fingerprints (the
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   * lambda, which Catalyst inlines without CSE into O(tokens²)
   * re-evaluation (the documented Shingles3 trap). */
 object Signals {
-
-  private val toksE = "split(lower(trim(text)), ' ')"
-  private val duckToks = "string_split(lower(trim(text)), ' ')"
 
   /** The fixed logistic quality model scored per document — one
     * codegen'd projection, no shuffle (expression chain documented on

@@ -150,9 +150,10 @@ object Similarity {
 
   /** Hamming-≤3 ball over the 4-bit sign code, nearest-first: the 15
     * XOR masks (only 0b1111 is outside the ball). Shared by the
-    * in-memory multiprobe and the partitioned-lake h3 probe so the
-    * recall-SLA ball is defined exactly once. */
-  private val ballMasks = Seq(0, 1, 2, 4, 8, 3, 5, 6, 9, 10, 12, 7, 11, 13, 14)
+    * in-memory multiprobe, the partitioned-lake h3 probe and
+    * graft.AnnRecall's radius ladder so the recall-SLA ball is defined
+    * exactly once. */
+  private[graft] val ballMasks = Seq(0, 1, 2, 4, 8, 3, 5, 6, 9, 10, 12, 7, 11, 13, 14)
 
   /** Hamming-≤2 ball over the 8-BIT code: 1 + 8 + C(8,2) = 37 XOR masks
     * — the 0.99-recall-SLA operating point of the measured width curve
@@ -165,7 +166,7 @@ object Similarity {
         yield (1 << i) | (1 << j)))
 
   /** 4-bit hyperplane sign code over the first 4 dims. */
-  private val codeE =
+  private[graft] val codeE =
     """CAST(CASE WHEN element_at(embedding, 1) > 0 THEN 8 ELSE 0 END +
             CASE WHEN element_at(embedding, 2) > 0 THEN 4 ELSE 0 END +
             CASE WHEN element_at(embedding, 3) > 0 THEN 2 ELSE 0 END +

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{H, Q, Tables}
+import graft.llm.TextRules.{duckToks, toksE}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,9 +12,6 @@ import org.apache.spark.sql.functions._
   * decimal arithmetic (never raw double division) and every score that
   * passes through `ln` is rounded to 6 decimals (libm ulp hazard). */
 object TextAnalysis {
-
-  private val toksE = "split(lower(trim(text)), ' ')"
-  private val duckToks = "string_split(lower(trim(text)), ' ')"
 
   val qs: Seq[(String, Q)] = Seq(
 

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Tables}
+import graft.llm.TextRules.{duckToks, toksE}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
@@ -34,9 +35,6 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructT
   * Signals/dsir precedent), decimal-lane sums, one terminal cast to
   * DOUBLE spelled identically in the DuckDB twin. */
 object Training {
-
-  private val toksE = "split(lower(trim(text)), ' ')"
-  private val duckToks = "string_split(lower(trim(text)), ' ')"
 
   /** Featurized corpus: label = "is this document English" (the
     * fasttext-langid-lite shape), features = the three proven exact-

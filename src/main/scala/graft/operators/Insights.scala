@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{H, Q, Tables}
+import graft.llm.TextRules.{duckToks, toksE}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1072,7 +1073,7 @@ object Insights {
     "llm_zipf" -> Q(
       (s, dir) => {
         val freq = Tables.documents(s, dir)
-          .selectExpr("explode(split(lower(trim(text)), ' ')) AS tok")
+          .selectExpr(s"explode($toksE) AS tok")
           .filter(length(col("tok")) > 0)
           .groupBy(col("tok")).agg(count(lit(1)).as("n"))
         freq
@@ -1082,8 +1083,8 @@ object Insights {
           .agg(round(expr("regr_slope(ln(n), ln(rank))"), 6).as("zipf_slope"),
                count(lit(1)).as("n_terms"))
       },
-      Some("""WITH f AS (SELECT tok, COUNT(*) AS n
-                         FROM (SELECT unnest(string_split(lower(trim(text)), ' ')) AS tok
+      Some(s"""WITH f AS (SELECT tok, COUNT(*) AS n
+                         FROM (SELECT unnest($duckToks) AS tok
                                FROM documents)
                          WHERE length(tok) > 0 GROUP BY 1),
                    rk AS (SELECT n, ROW_NUMBER() OVER (ORDER BY n DESC, tok) AS rank

@@ -495,7 +495,25 @@ object Streams {
     * Batch-equivalence (pinned in StreamingSpec): a doc's verdict is a
     * function of its OWN features plus the standing index only, so
     * micro-batch boundaries cannot change the answer — streamed verdicts
-    * over any file split equal the one-shot llm_ingest_e2e rows. */
+    * over any file split equal the one-shot llm_ingest_e2e rows.
+    *
+    * Deployment: run the dedup state on RocksDB
+    * (`spark.sql.streaming.stateStore.providerClass` =
+    * `RocksDBStateStoreProvider`) with
+    * `...stateStore.rocksdb.changelogCheckpointing.enabled=true`. At sf10
+    * (250k docs per batch) the default per-batch FULL-SNAPSHOT checkpoint
+    * hit CANNOT_LOAD_STATE_STORE.UNRELEASED_THREAD_ERROR: the maintenance
+    * thread holds the RocksDB instance while uploading, and the next
+    * batch's load times out at 120 s. Changelog checkpointing makes a
+    * commit an append of the delta, with snapshots amortized in
+    * maintenance. On one host, also raise
+    * `...stateStore.rocksdb.lockAcquireTimeoutMs` (600000 covered the
+    * first snapshot's upload) and push
+    * `spark.sql.streaming.stateStore.maintenanceInterval` past the run
+    * length (600s): with 32 instances in one JVM, maintenance snapshot
+    * fold-ups held instance locks >10 min against the next batch's loads.
+    * Across executors, keep the default interval and spread the
+    * instances instead. */
   def ingestFunnel(spark: SparkSession, incomingDir: String,
                    docSchema: StructType, standFeat: DataFrame,
                    outDir: String, checkpointDir: String,

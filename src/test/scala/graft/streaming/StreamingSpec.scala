@@ -521,7 +521,7 @@ class StreamingSpec extends SparkSuite {
     // micro-batch — must reproduce the one-shot batch funnel rows
     // exactly. The cross-batch dedup state runs on RocksDB (asserted via
     // provider-specific metrics, not just the conf), with changelog
-    // checkpointing as the funnel runs in production (StreamBench).
+    // checkpointing as Streams.ingestFunnel's scaladoc deploys it.
     val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     spark.conf.set(changelog, "true")
     try withRocksDB(true) {
