@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Run graft.Bench N times and log each run to /tmp/bench_<tag>_<i>.log.
 # Usage: bench_sweep.sh <tag> <n_runs> [sf_dir]
-# Per-run logs feed scripts/bench_minima.py (per-key minima are the
-# capability number on this noisy host; see BASELINE.md).
+# Each log holds the run's full Bench JSON line; scripts/gen_floors.py
+# reads the logs as they are and writes BENCH_FLOORS.json from them
+# (per-key minima are the capability number on this noisy host).
 set -u
 TAG="${1:?tag}"
 N="${2:?n_runs}"

@@ -7,13 +7,16 @@ prose). This generator makes the inventory un-driftable:
 
   1. `sbt runMain graft.KeysDump` prints every declared key + whether it
      carries a DuckDB oracle (the Registry is the single source of truth);
-  2. each key's defining site is grepped from src/main ("<key>" -> Q(...));
+  2. each key's defining file is grepped from src/main ("<key>" -> Q(...));
+     the file only, no line number: a line number in a generated file
+     drifts with every edit above it;
   3. plan-audit coverage is grepped from PlanAuditSpec;
   4. the streaming surfaces (st_*, ScalaTest-only by contract) are listed
      from Streams.scala scaladoc tags with their spec evidence.
 
-KeysSpec then asserts KEYS.md's table matches Registry.all exactly, so a
-new key without a regenerated KEYS.md fails the suite.
+KeysSpec then asserts KEYS.md's table matches Registry.all exactly and
+that each row's file defines its key, so a new key without a regenerated
+KEYS.md fails the suite.
 
 Usage: scripts/gen_keys.py [--dump keysdump.tsv]   (no --dump: runs sbt)
 """
@@ -56,10 +59,10 @@ def defining_sites():
             path = os.path.join(dirpath, fn)
             rel = os.path.relpath(path, REPO)
             with open(path, encoding="utf-8") as f:
-                for ln, line in enumerate(f, 1):
-                    m = re.search(r'"([A-Za-z0-9_]+)"\s*->\s*Q\(', line)
+                for line in f:
+                    m = re.search(r'"([A-Za-z0-9_]+)" -> Q\(', line)
                     if m:
-                        sites.setdefault(m.group(1), f"{rel}:{ln}")
+                        sites.setdefault(m.group(1), rel)
     return sites
 
 
@@ -71,26 +74,17 @@ def plan_audited():
 
 
 def streaming_rows():
-    """(surface, file:line, spec evidence) for the ScalaTest-only st_ keys."""
-    path = os.path.join(REPO, "src", "main", "scala", "graft", "streaming",
-                        "Streams.scala")
+    """(surface, file, spec evidence) for the ScalaTest-only st_ keys."""
+    site = "src/main/scala/graft/streaming/Streams.scala"
     rows = []
-    seen = {}
-    with open(path, encoding="utf-8") as f:
-        for ln, line in enumerate(f, 1):
+    with open(os.path.join(REPO, site), encoding="utf-8") as f:
+        for line in f:
             m = re.search(r"/\*\* (st_[a-z0-9_]+|src_stream_file)", line)
-            if m:
-                site = f"src/main/scala/graft/streaming/Streams.scala:{ln}"
-                # One surface may have TWO implementations (the
-                # sessionizer ships a flatMapGroupsWithState twin beside
-                # the transformWithState primary): merge into one row
-                # listing both sites instead of emitting a duplicate.
-                if m.group(1) in seen:
-                    i = seen[m.group(1)]
-                    rows[i] = (rows[i][0], rows[i][1] + "; " + site)
-                else:
-                    seen[m.group(1)] = len(rows)
-                    rows.append((m.group(1), site))
+            # one surface may have TWO implementations (the sessionizer
+            # ships a flatMapGroupsWithState twin beside the
+            # transformWithState primary): one row per surface
+            if m and m.group(1) not in (k for k, _ in rows):
+                rows.append((m.group(1), site))
     spec = os.path.join(REPO, "src", "test", "scala", "graft", "streaming",
                         "StreamingSpec.scala")
     with open(spec, encoding="utf-8") as f:

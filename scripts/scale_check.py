@@ -22,8 +22,9 @@ Usage:
   scale_check.py [--keys k1,k2,...] [--top N] [--flag E]
                  [--append BASELINE.md --tag r7]
 
-Default key set: the top N (15) slowest keys from the LAST '## Bench
-minima' section of BASELINE.md. Requires the sbt lock (runs sbt itself).
+Default key set: the top N (15) slowest keys by their floor in
+BENCH_FLOORS.json (scripts/gen_floors.py). Requires the sbt lock (runs
+sbt itself).
 """
 import json
 import math
@@ -36,16 +37,6 @@ from datetime import date
 SF_SMALL = "/root/testdata/sf0.01"   # --sf-small overrides
 SF_BIG = "/root/testdata/sf0.1"      # --sf-big overrides
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def last_minima_section(baseline):
-    with open(baseline) as f:
-        text = f.read()
-    sections = re.split(r"^## Bench minima ", text, flags=re.M)[1:]
-    if not sections:
-        sys.exit("no '## Bench minima' sections in BASELINE.md")
-    rows = re.findall(r"^\| (\S+) \| ([0-9.]+) \| \d+ \|$", sections[-1], re.M)
-    return {k: float(v) for k, v in rows}
 
 
 def bench_minima_env(keys, sf_dir):
@@ -96,7 +87,8 @@ def main():
     if keys_arg:
         keys = keys_arg.split(",")
     else:
-        floor = last_minima_section(os.path.join(REPO, "BASELINE.md"))
+        with open(os.path.join(REPO, "BENCH_FLOORS.json")) as f:
+            floor = json.load(f)["keys"]
         keys = sorted(floor, key=floor.get, reverse=True)[:top]
     print(f"keys: {','.join(keys)}", file=sys.stderr)
 

@@ -14,7 +14,7 @@ object Bench {
 
   /** Fixed CPU+IO contention probe — measures the HOST, not the engine.
     * Run immediately before the first pass and after the last; when
-    * either reading deviates >2x from the floor recorded in BASELINE.md
+    * either reading deviates >2x from the leg floor in BENCH_FLOORS.json
     * ("sentinel floor"), the capture is FLAGGED: adjudicate it with the
     * per-key gate vs recorded floors and discard only when the gate
     * breaches too (r9: a contended capture read as a 4.5x gate fail
@@ -47,11 +47,11 @@ object Bench {
   }
 
   /** Per-key engine floors + sentinel leg floors, from BENCH_FLOORS.json
-    * (generated by scripts/gen_floors.py — the per-key MIN across every
-    * '## Bench minima' section of BASELINE.md). The `contended` verdict
-    * and `floor_sum_ratio` read these; a missing or unparseable file
-    * leaves only the sentinel legs, on the built-in leg-floor
-    * fallbacks. */
+    * (generated by scripts/gen_floors.py from this host's full captures:
+    * the per-key MIN of `queries`, and the MIN of the final sentinel
+    * legs). The `contended` verdict and `floor_sum_ratio` read these; a
+    * missing or unparseable file leaves only the sentinel legs, on the
+    * built-in leg-floor fallbacks. */
   private def loadFloors(sfDir: String): (Map[String, Double], Double, Double) = {
     val fallback = (Map.empty[String, Double], 0.23, 0.12)
     try {
@@ -82,43 +82,25 @@ object Bench {
     }
   }
 
-  /** Corrupt-column-safe count for the two malformed-source keys
-    * (r12 VERDICT #5): plain count() prunes every output column, leaving
-    * `_corrupt_record` as the scan's ONLY referenced column — a plan
-    * Spark rejects by design — and the old `rdd.count()` fallback
-    * materialized FULL external rows, whose driver-side cost is warm-host
-    * noise (the only two >2×-floor keys in the r12 capture, 2.3-2.7×).
-    * `agg(count(<first real column>))` keeps that column referenced (so
-    * pruning stops at {col, _corrupt_record} and the permissive parse
-    * still runs per row — the honest work) without row materialization. */
-  private def corruptSafeCount(df: org.apache.spark.sql.DataFrame): Unit = {
-    val real = df.columns.find(_ != "_corrupt_record")
-    real match {
-      case Some(c) =>
-        df.agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.col(c))).collect()
-      case None => df.rdd.count() // nothing but the corrupt column: last resort
-    }
-    ()
-  }
+  /** Runs a key's frame to completion the way a user gets it: a `noop`
+    * write consumes every output row and column, so Catalyst can neither
+    * prune columns nor drop a final sort (`.count()` understated
+    * q_sort_global 3.0x, q_win_rank 2.0x, q_join_sortmerge 1.6x). It also
+    * keeps the malformed-source keys' real columns referenced, so their
+    * scans never reduce to the `_corrupt_record` column alone. */
+  private[graft] def consume(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** One timed run of a declared key: its seconds, or None when it threw.
     * A failure is LOUD on stderr (stdout stays parseable JSON) and is not
     * a sample: a fast failure would otherwise read as an impossibly-fast
     * key and poison the per-key minima (r9: llm_dedup_cluster "0.004 s"
     * was a crash). */
-  private def time(spark: SparkSession, sfDir: String, k: String,
-                   fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+  private[graft] def time(spark: SparkSession, sfDir: String, k: String,
+                          fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
     val t0 = System.nanoTime()
     try {
-      try fn(spark, sfDir).count() catch {
-        // count() prunes every column, and a scan whose output is only
-        // the _corrupt_record column rejects that plan by design
-        // (src_csv_malformed / src_json_malformed)
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("QUERY_ONLY_CORRUPT_RECORD_COLUMN") =>
-          corruptSafeCount(fn(spark, sfDir))
-      }
+      consume(fn(spark, sfDir))
       Some((System.nanoTime() - t0) / 1e9)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] $k FAILED: ${e.getClass.getName}: ${e.getMessage}")
@@ -189,7 +171,7 @@ object Bench {
     // read 2-5x its steady-state time in first-slot runs).
     Seq("q_join_broadcast", "q_win_topn_group", "fn_array", "llm_text_stats")
       .flatMap(SparkEntry.queries.get)
-      .foreach { fn => try fn(spark, sfDir).count()
+      .foreach { fn => try consume(fn(spark, sfDir))
                        catch { case _: Throwable => () } }
     // Shared pipeline-stage builds run BEFORE each pass's per-key loop
     // and report as their own stage:<name> line items: the write-once/
@@ -246,14 +228,13 @@ object Bench {
     // sentinel_s = the worse of the two brackets (contention any time
     // during the run invalidates the capture); pre/post kept so a reader
     // can see WHEN the load arrived. The final legs are the post-pass
-    // reading that "contended" judges. Floors live in BENCH_FLOORS.json /
-    // BASELINE.md.
+    // reading that "contended" judges. Floors live in BENCH_FLOORS.json.
     val sentinelJson =
       f""""sentinel_s":${math.max(sentinelPre, sentinelPost)}%.3f,"sentinel_pre_s":$sentinelPre%.3f,"sentinel_post_s":$sentinelPost%.3f,""" +
       f""""sentinel_cpu_s":${math.max(sentinelPreCpu, sentinelPostCpu)}%.3f,"sentinel_io_s":${math.max(sentinelPreIo, sentinelPostIo)}%.3f,""" +
       f""""sentinel_final_cpu_s":$sentinelPostCpu%.3f,"sentinel_final_io_s":$sentinelPostIo%.3f,""" +
       f""""contended":$isContended,"reps":$REPS,"failed":${rep.failed.size},"floor_sum_ratio":$floorSumRatio%.3f"""
-    // Full per-query line first: input for scripts/bench_minima.py and any
+    // Full per-query line first: input for scripts/gen_floors.py and any
     // consumer that reads the whole stdout. "queries" holds the minima.
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec",$sentinelJson,"queries":${jsonMap(rep.min)},"queries_median":${jsonMap(rep.median)},"sf":"$sfDir"}"""
@@ -262,10 +243,10 @@ object Bench {
     // line with "[info] " and appends a trailing "[success] Total time…"
     // line, so the snapshot's last line is never bare JSON (BENCH_r1–r5 all
     // landed parsed:null). Persist the full line to a repo file as well —
-    // scripts/bench_minima.py and the judge read the file when the stdout
+    // scripts/gen_floors.py and the judge read the file when the stdout
     // artifact fails to parse. Relative to the working directory (sbt runs
     // from the project root), so any checkout location gets the artifact
-    // next to its own BASELINE.md. Best-effort, but LOUD on failure: a
+    // next to its own BENCH_FLOORS.json. Best-effort, but LOUD on failure: a
     // read-only checkout must not fail the bench itself, yet a silently
     // missing artifact defeats the file's purpose. A FILTERED run
     // (SPARK_GRAFT_ONLY — local iteration, scale_check's two-sf probes)
@@ -287,7 +268,7 @@ object Bench {
     // TOTALS ONLY (~300 chars, guaranteed inside any tail): total,
     // n_queries, the sentinel verdict, and the contended flag. The
     // per-key map already lives in the full line above and in
-    // BENCH_LOCAL.json (what bench_minima.py and the judge read).
+    // BENCH_LOCAL.json (what gen_floors.py and the judge read).
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec",$sentinelJson%s,"n_queries":${rep.min.size},"sf":"$sfDir"}""")
     spark.stop()
   }

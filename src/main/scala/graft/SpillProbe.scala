@@ -48,8 +48,8 @@ object SpillProbe {
         case Some(fn) =>
           val before = snap(); peakMem.set(0L)
           val t0 = System.nanoTime()
-          // a noop write runs the full plan (count() prunes columns and sorts)
-          val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          // the same full-output consume Bench times
+          val ok = try { Bench.consume(fn(spark, sfDir)); true }
                    catch { case e: Throwable =>
                      System.err.println(s"[spill] $k FAILED: ${e.getMessage}")
                      false }

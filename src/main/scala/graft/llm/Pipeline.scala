@@ -49,12 +49,7 @@ object Pipeline {
     Memo.stage(s, dir, "cluster_labels") { computeLabels(s, dir) }
 
   private def computeLabels(s: SparkSession, dir: String): DataFrame = {
-    // Lineage cut per step: reliable checkpoint when the session has a
-    // checkpoint dir (the real-cluster setting — survives executor loss),
-    // localCheckpoint otherwise (local mode / tests).
-    def cut(df: DataFrame): DataFrame =
-      if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
+    val cut: DataFrame => DataFrame = Memo.cut(s)
     val pairs = Dedup.nearPairs(s, dir).select(col("id_a"), col("id_b"))
     val raw = pairs.union(pairs.select(col("id_b"), col("id_a")))
       .toDF("src", "dst")

@@ -9,15 +9,23 @@ import org.scalatest.funsuite.AnyFunSuite
 class KeysSpec extends AnyFunSuite {
 
   private val Row =
-    """^\| (\S+) \| \S+ \| (duckdb|rows-only) \| (yes|-) \|$""".r
+    """^\| (\S+) \| (\S+) \| (duckdb|rows-only) \| (yes|-) \|$""".r
 
-  test("KEYS.md rows match Registry.all exactly (run scripts/gen_keys.py after adding keys)") {
+  private def read(path: String): String = {
     // explicit UTF-8: the test JVM's default charset is not guaranteed,
     // and KEYS.md carries em dashes
-    val src = scala.io.Source.fromFile("KEYS.md", "UTF-8")
-    val rows = try src.getLines().collect {
-      case Row(k, oracle, _) => k -> (oracle == "duckdb")
-    }.toMap finally src.close()
+    val src = scala.io.Source.fromFile(path, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
+  /** (key, defining file, has a DuckDB oracle) per row of the keys table. */
+  private lazy val rows: Seq[(String, String, Boolean)] =
+    read("KEYS.md").linesIterator.collect {
+      case Row(k, file, oracle, _) => (k, file, oracle == "duckdb")
+    }.toSeq
+
+  test("KEYS.md rows match Registry.all exactly (run scripts/gen_keys.py after adding keys)") {
+    val rows = this.rows.map { case (k, _, o) => k -> o }.toMap
 
     val reg = Registry.all.map { case (k, q) => k -> q.oracle.isDefined }.toMap
     val missing = reg.keySet -- rows.keySet
@@ -30,5 +38,14 @@ class KeysSpec extends AnyFunSuite {
     assert(wrongOracle.isEmpty,
       s"KEYS.md oracle flags stale for: ${wrongOracle.toSeq.sorted.take(10)}")
     assert(rows.size == reg.size)
+  }
+
+  test("each KEYS.md row names the file that defines its key") {
+    val wrong = rows.groupBy(_._2).toSeq.flatMap { case (file, rs) =>
+      val text = read(file)
+      rs.collect { case (k, _, _) if !text.contains("\"" + k + "\" -> Q(") => s"$k @ $file" }
+    }
+    assert(rows.nonEmpty && wrong.isEmpty,
+      s"KEYS.md defining files stale for: ${wrong.take(10)} (regenerate: scripts/gen_keys.py)")
   }
 }

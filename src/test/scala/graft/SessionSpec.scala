@@ -70,4 +70,18 @@ class SessionSpec extends SparkSuite {
     Tables.configure(bare)
     assert(functionNames(bare) == before)
   }
+
+  test("Bench.time consumes the malformed-source keys' full output with no " +
+       "fallback, and a key that throws is never a time") {
+    // count() pruned these scans down to _corrupt_record alone, a plan
+    // Spark rejects; the full-output consume keeps the real columns
+    Seq("src_csv_malformed", "src_json_malformed").foreach { k =>
+      assert(Bench.time(spark, sf, k, SparkEntry.queries(k)).isDefined, k)
+    }
+    assert(Bench.time(spark, sf, "boom",
+      (_, _) => throw new IllegalStateException("boom")).isEmpty)
+    // a frame that fails only when executed is not a time either
+    assert(Bench.time(spark, sf, "boom_at_run",
+      (s, _) => s.range(1).selectExpr("raise_error('boom') AS x")).isEmpty)
+  }
 }
