@@ -29,12 +29,23 @@ object Tables {
     * goes through it. Session confs reach the Hadoop conf of each
     * checkpoint file manager and state store (`newHadoopConf`). Idempotent;
     * once the functions are present it costs one registry lookup beyond
-    * the three conf sets. [[Q.fn]] runs it before every key, so a session
-    * built elsewhere needs nothing from its caller. */
+    * the conf sets. [[Q.fn]] runs it before every key, so a session
+    * built elsewhere needs nothing from its caller.
+    *
+    * It also turns off `spark.sql.artifact.isolation.enabled` (Spark 4
+    * defaults it on). With isolation, every session tags its jobs with
+    * its own artifact UUID and the executor builds a class loader per
+    * UUID; the codegen cache is keyed on (class loader, code), so each
+    * new session (a fresh `newSession()`, every streaming query's clone)
+    * compiles every generated class again. The engine adds no session
+    * artifacts (no `addArtifact`, no `ADD JAR`), so isolation buys it
+    * nothing. Spark reads the conf at a session's first execution, and
+    * this install runs before that on every path; a clone inherits it. */
   def configure(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[graft.io.LocalFs].getName)
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
     if (!graft.functions.Custom.registered(spark)) graft.functions.Custom.register(spark)
     spark
   }

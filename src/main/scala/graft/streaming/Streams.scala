@@ -513,7 +513,17 @@ object Streams {
     * length (600s): with 32 instances in one JVM, maintenance snapshot
     * fold-ups held instance locks >10 min against the next batch's loads.
     * Across executors, keep the default interval and spread the
-    * instances instead. */
+    * instances instead.
+    *
+    * The query starts with no-data micro-batches off
+    * (`spark.sql.streaming.noDataMicroBatches.enabled=false`, set only
+    * around `start()`, which copies the session conf into the query; the
+    * caller's setting is restored as it was, absent included). Draining
+    * a backlog otherwise ends in an empty batch whose only work is to
+    * evict dedup state older than the watermark; here that eviction
+    * waits for the next data batch. Keys are kept longer, never
+    * shorter, so no duplicate that was dropped before gets through, and
+    * state stays bounded by the same 1-hour horizon. */
   def ingestFunnel(spark: SparkSession, incomingDir: String,
                    docSchema: StructType, standFeat: DataFrame,
                    outDir: String, checkpointDir: String,
@@ -526,7 +536,10 @@ object Streams {
     // a fresh index generation for the session lifetime. A terminated
     // query (graceful or failed) releases its own index here; the
     // listener self-removes so restarts don't stack listeners.
-    val q = fileStream(spark, incomingDir, docSchema, maxFilesPerTrigger)
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val callerNoData = spark.conf.getAll.get(noData)
+    spark.conf.set(noData, "false")
+    val q = try fileStream(spark, incomingDir, docSchema, maxFilesPerTrigger)
       .withColumn("ingest_ts", current_timestamp())
       .withWatermark("ingest_ts", "1 hour")
       .dropDuplicatesWithinWatermark("doc_id")
@@ -543,6 +556,7 @@ object Streams {
         ()
       }
       .start()
+    finally callerNoData.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
     // Release keyed on RUN id, not query id (r15, ADVICE medium): a
     // checkpoint restart reuses the query id (only runId changes), so an
     // id-keyed listener on the NEW run would fire on the OLD run's late

@@ -497,9 +497,12 @@ class PlanAuditSpec extends SparkSuite {
     // just the emitted array.
     val n = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(n == 1, s"expected one shared user_id exchange, got $n:\n$p")
-    assert(p.contains("4096"), s"state cap not in plan:\n$p")
+    // match the filter's comparison, not the bare number: an expression
+    // id such as `acc#40960` also contains "4096"
+    val cap = s"<= ${graft.streaming.Streams.EWMA_STATE_CAP})"
+    assert(p.contains(cap), s"state cap not in plan:\n$p")
     val iAgg = p.indexOf("collect_list")
-    val iCap = p.indexOf("4096")
+    val iCap = p.indexOf(cap)
     assert(iAgg >= 0 && iCap > iAgg,
       s"cap filter not below the array aggregation:\n$p")
   }

@@ -66,9 +66,32 @@ class SessionSpec extends SparkSuite {
     assert(bare.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(bare.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(bare.conf.get("fs.AbstractFileSystem.file.impl") == classOf[graft.io.LocalFs].getName)
+    assert(bare.conf.get("spark.sql.artifact.isolation.enabled") == "false")
     val before = functionNames(bare)
     Tables.configure(bare)
     assert(functionNames(bare) == before)
+  }
+
+  test("engine sessions share one executor class loader, so a query run " +
+       "in a second session compiles nothing again") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.Encoders
+    val sessions = Seq.fill(2)(Tables.configure(spark.newSession()))
+    val loaders = sessions.map { s =>
+      s.range(0, 8, 1, 4).mapPartitions(_ =>
+        Iterator(System.identityHashCode(Thread.currentThread.getContextClassLoader))
+      )(Encoders.scalaInt).collect().toSet
+    }
+    assert(loaders.forall(_.size == 1) && loaders.distinct.size == 1,
+      s"task class loaders per session: $loaders")
+    def run(s: SparkSession): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Bench.consume(s.range(0, 1000, 1, 4)
+        .selectExpr("id % 7 AS k", "id * 3 AS v").groupBy("k").sum("v"))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    run(sessions.head)
+    assert(run(sessions(1)) == 0)
   }
 
   test("Bench.time consumes the malformed-source keys' full output with no " +

@@ -274,6 +274,9 @@ class StreamingSpec extends SparkSuite {
     Seq(("fmgws", Streams.sessionize _, false),
         ("tws", Streams.sessionizeTWS _, true))
 
+  /** Set by the ingest funnel only around its query's start(). */
+  private val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   private def withRocksDB[A](needed: Boolean)(body: => A): A =
     if (!needed) body
     else {
@@ -534,8 +537,11 @@ class StreamingSpec extends SparkSuite {
         .parquet(graft.llm.Dedup.ingestFeatPath(spark, sf))
         .filter(col("doc_id") % 2 === 0)
       val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      assert(!spark.conf.getAll.contains(noData))
       val q = Streams.ingestFunnel(spark, inDir, docs.schema, standFeat,
                                    outDir, ckpt)
+      // the query's no-data setting does not outlive start(): unset stays unset
+      assert(!spark.conf.getAll.contains(noData))
       // Checkpoint I/O starts no process (graft.io.LocalFs, installed by
       // Tables.configure): no started command may name the checkpoint dir.
       val forks = graft.io.ProcessStarts.during {
@@ -558,6 +564,11 @@ class StreamingSpec extends SparkSuite {
       val noCrc = entries.filterNot(p =>
         Files.isRegularFile(p.resolveSibling(s".${p.getFileName}.crc")))
       assert(noCrc.isEmpty, s"entries without a .crc sibling: ${noCrc.mkString(", ")}")
+      // Draining the backlog runs data batches only: no trailing empty
+      // batch after the last file (an executed batch times addBatch).
+      val executed = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+      assert(executed.nonEmpty && executed.forall(_.numInputRows > 0),
+        s"executed batches' input rows: ${executed.map(_.numInputRows).mkString(", ")}")
       // State rows: each micro-batch's verdicts are ONE job over the
       // batch, so the dedup state holds exactly one row per distinct
       // incoming doc. A second job over the batch frame re-executes the
@@ -604,9 +615,15 @@ class StreamingSpec extends SparkSuite {
       val wave2 = incoming.filter(col("doc_id") >= 250)
       assert(wave1.count() > 0 && wave2.count() > 0)
       wave1.repartition(2).write.mode("append").parquet(inDir)
-      val q1 = Streams.ingestFunnel(spark, inDir, docs.schema, standFeat,
-                                    outDir, ckpt)
+      // a caller's explicit no-data setting is the same after the funnel starts
+      spark.conf.set(noData, "true")
+      val (q1, kept) = try {
+        val q = Streams.ingestFunnel(spark, inDir, docs.schema, standFeat,
+                                     outDir, ckpt)
+        (q, spark.conf.getAll.get(noData))
+      } finally spark.conf.unset(noData)
       try q1.processAllAvailable() finally q1.stop()
+      assert(kept.contains("true"), s"caller's setting after the funnel: $kept")
       val afterWave1 = new java.io.File(outDir).listFiles().count(_.getName.startsWith("batch_"))
       wave2.repartition(2).write.mode("append").parquet(inDir)
       val q2 = Streams.ingestFunnel(spark, inDir, docs.schema, standFeat,
