@@ -20,7 +20,8 @@ catches an O(n^2) edge builder without a judge reading plans.
 
 Usage:
   scale_check.py [--keys k1,k2,...] [--top N] [--flag E]
-                 [--append BASELINE.md --tag r7]
+
+It prints the exponent table as markdown on stdout and writes no file.
 
 Default key set: the top N (15) slowest keys by their floor in
 BENCH_FLOORS.json (scripts/gen_floors.py). Requires the sbt lock (runs
@@ -81,8 +82,6 @@ def main():
     sf_big = opt("--sf-big", SF_BIG)
     top = int(opt("--top", "15"))
     flag = float(opt("--flag", "1.35"))
-    append_to = opt("--append")
-    tag = opt("--tag", "r?")
 
     if keys_arg:
         keys = keys_arg.split(",")
@@ -96,7 +95,7 @@ def main():
     big = bench_minima_env(keys, sf_big)
 
     header = (
-        f"## Scale exponents {tag} ({date.today().isoformat()}, "
+        f"## Scale exponents ({date.today().isoformat()}, "
         f"{sf_small} vs {sf_big}, flag > {flag})\n\n"
         f"e = log10(t_big / t_small): ~1 linear, <1 overhead-bound, "
         f">{flag} super-linear (needs adjudication or a fix).\n\n"
@@ -116,10 +115,6 @@ def main():
                     f"| {verdict} |\n")
     table = header + "".join(rows)
     print(table)
-    if append_to:
-        with open(append_to, "a") as f:
-            f.write("\n" + table)
-        print(f"-- appended to {append_to}", file=sys.stderr)
     if flagged:
         print("FLAGGED super-linear keys: "
               + ", ".join(f"{k} (e={e:.2f})" for k, e in flagged),

@@ -20,17 +20,18 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   /** The one per-session install: the runtime-settable session configs
-    * every entry point needs, plus the engine's native functions
-    * ([[graft.functions.Custom.functions]]). The confs are the events
-    * `nanosAsLong` read, UTC, and the `file:` file system
+    * every entry point needs, plus the engine's session extensions
+    * ([[graft.functions.GraftExtensions]]: the native functions, the
+    * `vec_dot` kernel rule and the top-k planner strategy). The confs
+    * are the events `nanosAsLong` read, UTC, and the `file:` file system
     * ([[graft.io.LocalFs]]): Hadoop's local `FileContext` forks `chmod`
     * and `readlink` per call when libhadoop is absent, and every
     * streaming checkpoint write (offset/commit logs, RocksDB changelogs)
     * goes through it. Session confs reach the Hadoop conf of each
     * checkpoint file manager and state store (`newHadoopConf`). Idempotent;
-    * once the functions are present it costs one registry lookup beyond
-    * the conf sets. [[Q.fn]] runs it before every key, so a session
-    * built elsewhere needs nothing from its caller.
+    * once the extensions are present it costs one registry lookup and two
+    * list checks beyond the conf sets. [[Q.fn]] runs it before every key,
+    * so a session built elsewhere needs nothing from its caller.
     *
     * It also turns off `spark.sql.artifact.isolation.enabled` (Spark 4
     * defaults it on). With isolation, every session tags its jobs with
@@ -46,8 +47,7 @@ object Tables {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[graft.io.LocalFs].getName)
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
-    if (!graft.functions.Custom.registered(spark)) graft.functions.Custom.register(spark)
-    spark
+    graft.functions.GraftExtensions.install(spark)
   }
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -12,6 +12,9 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** SURVEY §2j — the engine's custom-extension surface: scalar UDF, typed
   * `Aggregator` UDAF, generator/UDTF, and one native Catalyst `Expression`
@@ -379,18 +382,37 @@ object Custom {
   )
 }
 
-/** `SparkSessionExtensions` injector — the idiomatic cluster packaging:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions` gives
-  * every session the engine's native functions ([[Custom.functions]])
-  * and the [[graft.plans.KernelSubstitution]] rewrite without code
-  * changes. Sessions built without extensions get the same functions
-  * from [[Tables.configure]]. */
+/** The engine's session extensions, defined once: [[Custom.functions]],
+  * the rule [[graft.plans.KernelSubstitution]] (matches only the
+  * float-array dot-product fold) and the strategy
+  * [[graft.plans.TopKStrategy]] (plans only the node that
+  * [[graft.plans.TopK.rewrite]] puts into a frame). [[Tables.configure]]
+  * installs them; `--conf spark.sql.extensions=graft.functions.GraftExtensions`
+  * injects the same list into a cluster's sessions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => graft.plans.KernelSubstitution)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftExtensions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
     Custom.functions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(builder.getClass.getCanonicalName, name), builder))
     }
+  }
+}
+
+object GraftExtensions {
+  val rules: Seq[Rule[LogicalPlan]] = Seq(graft.plans.KernelSubstitution)
+  val strategies: Seq[SparkStrategy] = Seq(graft.plans.TopKStrategy)
+
+  /** Adds the list to `spark`, checking before it adds, so a second call
+    * adds nothing. */
+  def install(spark: SparkSession): SparkSession = {
+    if (!Custom.registered(spark)) Custom.register(spark)
+    val x = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    val newRules = rules.filterNot(x.extraOptimizations.contains)
+    if (newRules.nonEmpty) x.extraOptimizations ++= newRules
+    val newStrategies = strategies.filterNot(x.extraStrategies.contains)
+    if (newStrategies.nonEmpty) x.extraStrategies ++= newStrategies
+    spark
   }
 }

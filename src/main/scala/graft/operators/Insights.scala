@@ -585,7 +585,8 @@ object Insights {
     // md5 kernel), the per-set bottom-64 is the declarative
     // row_number()<=k spelling that TopKPerGroup rewrites to bounded
     // partial/final buffers (no per-set sort, survivors-only shuffle —
-    // the q_topn_native plan), and the estimators are the classic KMV
+    // the q_topn_native plan; TopK.rewrite on the sketch frame before its
+    // cut and on the result), and the estimators are the classic KMV
     // forms: |S| ≈ (k−1)/θ_k, |A∩B| ≈ |{common < θ}|/θ with
     // θ = min(θ_a, θ_b). Every number is a pure function of the data, so
     // the oracle pins the ESTIMATES bit-for-bit, with the exact counts
@@ -595,7 +596,6 @@ object Insights {
     // build because a declared query is one expression.)
     "q_theta_sketch" -> Q(
       (s, dir) => {
-        graft.plans.TopK.install(s)
         val k = 64
         val o = Tables.orders(s, dir)
         // ONE scan + ONE evaluated member table (r15): the old per-tag
@@ -616,8 +616,8 @@ object Insights {
                 .cast("double") / lit(1000000008.0)))
         val wSet = Window.partitionBy(col("tag"))
           .orderBy(col("u"), col("o_custkey"))
-        val sk = m.withColumn("rk", row_number().over(wSet))
-          .filter(col("rk") <= k)
+        val sk = graft.plans.TopK.rewrite(
+          m.withColumn("rk", row_number().over(wSet)).filter(col("rk") <= k))
         // one row per sketched member, tag membership as flags — every
         // downstream stat reads this ≤2k-row table (PlanCut: THREE
         // consumers — stats, the union sketch, the intersection count)
@@ -647,7 +647,7 @@ object Insights {
           .agg(sum(col("xa")).as("exact_a"), sum(col("xb")).as("exact_b"),
                count(lit(1)).as("exact_union"),
                sum(col("xa") * col("xb")).as("exact_intersect"))
-        stats.crossJoin(pu).crossJoin(cc).crossJoin(ex)
+        graft.plans.TopK.rewrite(stats.crossJoin(pu).crossJoin(cc).crossJoin(ex)
           .select(
             when(col("nk_a") < k, col("nk_a").cast("double"))
               .otherwise(lit((k - 1).toDouble) / col("theta_a")).as("est_a"),
@@ -658,7 +658,7 @@ object Insights {
             (col("c").cast("double") /
               least(col("theta_a"), col("theta_b"))).as("est_intersect"),
             col("exact_a"), col("exact_b"),
-            col("exact_union"), col("exact_intersect"))
+            col("exact_union"), col("exact_intersect")))
       },
       Some("""WITH ma AS (SELECT DISTINCT o_custkey FROM orders
                           WHERE o_orderpriority = '1-URGENT'),

@@ -92,22 +92,21 @@ object Windows {
               ORDER BY o_custkey, rn""")),
 
     // Same declarative window spelling as q_win_topn_group, planned
-    // through the native TopKPerGroup operator (graft.plans.TopK): the
+    // through the native TopKPerGroup operator (graft.plans.TopK.rewrite): the
     // rewrite replaces shuffle-everything + full partition sort with
     // partial bounded buffers → exchange of survivors only → final merge.
     // The oracle is the plain window SQL — the hash gate proves the
     // custom operator's equivalence; PlanAuditSpec pins the plan shape.
     "q_topn_native" -> Q(
       (s, dir) => {
-        graft.plans.TopK.install(s)
         val w = Window.partitionBy(col("o_orderpriority"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        Tables.orders(s, dir)
+        graft.plans.TopK.rewrite(Tables.orders(s, dir)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .select(col("o_orderpriority"), col("rn"), col("o_orderkey"),
                   col("o_totalprice"))
-          .orderBy(col("o_orderpriority"), col("rn"))
+          .orderBy(col("o_orderpriority"), col("rn")))
       },
       Some("""SELECT o_orderpriority, rn, o_orderkey, o_totalprice FROM (
                 SELECT o_orderpriority, o_orderkey, o_totalprice,

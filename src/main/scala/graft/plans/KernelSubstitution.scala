@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.functions.Sketches.DotProduct
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -19,9 +18,11 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * `org.apache.spark.sql.functions`, the rewrite is the optimizer's job —
   * the same posture Catalyst itself takes, extended to our kernels.
   *
-  * Injected two ways: [[graft.functions.GraftExtensions]] for cluster
-  * deploys (`spark.sql.extensions`), or [[KernelSubstitution.install]]
-  * onto an existing session (`experimental.extraOptimizations`). */
+  * One entry of the engine's install list
+  * ([[graft.functions.GraftExtensions]]): every session
+  * [[graft.Tables.configure]] installs carries it, and so does a cluster
+  * session built with `spark.sql.extensions`. It changes no other plan:
+  * only the fold over two float arrays matches. */
 object KernelSubstitution extends Rule[LogicalPlan] {
 
   /** x * y (or CAST(x)*CAST(y)) over exactly the two lambda args. */
@@ -73,13 +74,4 @@ object KernelSubstitution extends Rule[LogicalPlan] {
              isIdentity(fin, res) =>
         DotProduct(a, b)
     }
-
-  /** Idempotently attach to a live session (classic only). */
-  def install(spark: SparkSession): SparkSession = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraOptimizations.contains(this))
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ this
-    spark
-  }
 }

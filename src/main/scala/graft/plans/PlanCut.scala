@@ -4,7 +4,8 @@
 // the same internal surface Dataset.checkpoint/localCheckpoint build on.
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Single-evaluation plan cut for H.prefixSums (r14, ADVICE fix).
   *
@@ -49,4 +50,14 @@ object PlanCut {
     classic.sparkSession.internalCreateDataFrame(
       classic.queryExecution.toRdd.map(_.copy()), classic.schema)
   }
+}
+
+/** A DataFrame over a resolved logical plan, the pattern of Spark's
+  * package-private `Dataset.ofRows`: [[graft.plans.TopK.rewrite]] turns a
+  * rewritten optimized plan back into a frame, and the window-scale
+  * guard runs a window's child subplan on its own. */
+object Frames {
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window, WindowGroupLimit}
@@ -27,10 +27,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * O(n·log k) against the window's O(n·log n).
   *
   * Users keep writing the DECLARATIVE window form; [[TopKRewrite]] swaps
-  * the plan when the filter bounds a bare `row_number()` by a literal —
-  * the same declarative-in/kernel-out contract as [[KernelSubstitution]].
-  * Determinism contract unchanged: the window's ORDER BY must carry a
-  * unique tiebreaker (true of every declared query, SURVEY §7.4). */
+  * the plan of a frame that asks for it ([[TopK.rewrite]]) when the filter
+  * bounds a bare `row_number()` by a literal — the same declarative-in/
+  * kernel-out contract as [[KernelSubstitution]]. Determinism contract
+  * unchanged: the window's ORDER BY must carry a unique tiebreaker (true
+  * of every declared query, SURVEY §7.4). */
 case class TopKPerGroupNode(
     groupExprs: Seq[Expression],
     order: Seq[SortOrder],
@@ -38,6 +39,7 @@ case class TopKPerGroupNode(
     rnAttr: Attribute,
     child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output :+ rnAttr
+  override def producedAttributes: AttributeSet = AttributeSet(rnAttr)
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerGroupNode =
     copy(child = newChild)
 }
@@ -129,7 +131,11 @@ case class TopKPerGroupExec(
   * still runs the full WindowExec to compute the rank afterwards. This
   * operator subsumes both: bounded buffers instead of sorts, rank emitted
   * directly. The rule therefore strips the inferred WindowGroupLimit
-  * (same partition/order keys) from below the matched Window. */
+  * (same partition/order keys) from below the matched Window.
+  *
+  * It is applied to one frame's optimized plan ([[TopK.rewrite]]), never
+  * installed in a session: a session-wide rule would change the plan of
+  * every window top-k that runs there, asked for or not. */
 object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   /** `rn <= 5L` analyzes as `Cast(rn AS BIGINT) <= 5L` (row_number is
@@ -197,7 +203,9 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /** Planning strategy for the rewritten node — emits the partial/final
-  * pair; EnsureRequirements supplies the exchange between them. */
+  * pair; EnsureRequirements supplies the exchange between them. It plans
+  * nothing else, so every engine session carries it
+  * ([[graft.functions.GraftExtensions]]). */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroupNode(g, o, k, rn, child) =>
@@ -208,27 +216,13 @@ object TopKStrategy extends SparkStrategy {
 }
 
 object TopK {
-  /** Idempotently attach rule + strategy to a live session. */
-  def install(spark: SparkSession): SparkSession = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraOptimizations.contains(TopKRewrite))
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ TopKRewrite
-    if (!classic.experimental.extraStrategies.contains(TopKStrategy))
-      classic.experimental.extraStrategies =
-        classic.experimental.extraStrategies :+ TopKStrategy
-    spark
-  }
-
-  /** Detach again — tests that pin the PLAIN window plan need a session
-    * without the rewrite (install/uninstall pairs keep shared test
-    * sessions order-independent). */
-  def uninstall(spark: SparkSession): SparkSession = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.experimental.extraOptimizations =
-      classic.experimental.extraOptimizations.filterNot(_ == TopKRewrite)
-    classic.experimental.extraStrategies =
-      classic.experimental.extraStrategies.filterNot(_ == TopKStrategy)
-    spark
-  }
+  /** `df` with [[TopKRewrite]] applied to its own optimized plan, rebuilt
+    * as a new frame ([[org.apache.spark.sql.graft.Frames]]) that plans
+    * through [[TopKStrategy]]. The session is left as it was, so the
+    * rewrite reaches this frame and what is built on it, and no other
+    * query. Apply it before a frame is cut ([[org.apache.spark.sql.graft.PlanCut]]):
+    * the cut's rows are planned already. */
+  def rewrite(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.Frames.ofRows(
+      df.sparkSession, TopKRewrite(df.queryExecution.optimizedPlan))
 }

@@ -1,11 +1,12 @@
 package graft
 
-import graft.plans.KernelSubstitution
 import org.apache.spark.sql.functions._
 
 /** The declarative-in/kernel-out contract: the optimizer rewrites the
   * `aggregate(zip_with(...))` dot-product fold to the codegen `vec_dot`
-  * kernel, bit-identically. */
+  * kernel, bit-identically. The rule is in every installed session
+  * ([[Tables.configure]]), so the reference bits come from the same
+  * sequential double fold computed on the driver. */
 class KernelSubstitutionSpec extends SparkSuite {
   import spark.implicits._
 
@@ -20,39 +21,24 @@ class KernelSubstitutionSpec extends SparkSuite {
       .select(col("embedding").as("a"), reverse(col("embedding")).as("b"))
 
   test("rule rewrites the fold to vec_dot and preserves bits") {
-    val df = vectors
-    val baseline = df.selectExpr(s"$foldSql AS dot").as[Double].collect()
-
-    KernelSubstitution.install(spark)
-    try {
-      val rewritten = df.selectExpr(s"$foldSql AS dot")
-      val plan = rewritten.queryExecution.optimizedPlan.toString
-      assert(plan.contains("vec_dot"), s"kernel not substituted:\n$plan")
-      val out = rewritten.as[Double].collect()
-      out.zip(baseline).foreach { case (k, f) =>
-        assert(java.lang.Double.doubleToLongBits(k) ==
-               java.lang.Double.doubleToLongBits(f), s"bit drift: $k vs $f")
-      }
-    } finally {
-      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations.filterNot(_ == KernelSubstitution)
+    val rewritten = vectors.selectExpr("a", "b", s"$foldSql AS dot")
+    val plan = rewritten.queryExecution.optimizedPlan.toString
+    assert(plan.contains("vec_dot"), s"kernel not substituted:\n$plan")
+    val rows = rewritten.as[(Seq[Float], Seq[Float], Double)].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (a, b, k) =>
+      val f = a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x.toDouble * y.toDouble }
+      assert(java.lang.Double.doubleToLongBits(k) ==
+             java.lang.Double.doubleToLongBits(f), s"bit drift: $k vs $f")
     }
   }
 
   test("rule leaves non-matching folds alone") {
-    KernelSubstitution.install(spark)
-    try {
-      // sum-of-squares over ints — different shape, must not rewrite
-      val df = Seq((Array(1, 2, 3), Array(4, 5, 6))).toDF("p", "q")
-      val kept = df.selectExpr(
-        "aggregate(zip_with(p, q, (x, y) -> x + y), 0, (acc, v) -> acc + v) AS s")
-      assert(!kept.queryExecution.optimizedPlan.toString.contains("vec_dot"))
-      assert(kept.as[Int].collect().sameElements(Array(21)))
-    } finally {
-      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations.filterNot(_ == KernelSubstitution)
-    }
+    // sum-of-squares over ints — different shape, must not rewrite
+    val df = Seq((Array(1, 2, 3), Array(4, 5, 6))).toDF("p", "q")
+    val kept = df.selectExpr(
+      "aggregate(zip_with(p, q, (x, y) -> x + y), 0, (acc, v) -> acc + v) AS s")
+    assert(!kept.queryExecution.optimizedPlan.toString.contains("vec_dot"))
+    assert(kept.as[Int].collect().sameElements(Array(21)))
   }
 }

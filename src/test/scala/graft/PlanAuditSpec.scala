@@ -8,17 +8,8 @@ import org.apache.spark.sql.functions._
   * instead of surviving until a 100 TB run finds it. */
 class PlanAuditSpec extends SparkSuite {
 
-  private def planOf(key: String): String = {
-    // Deterministic baseline regardless of suite order: q_topn_native /
-    // q_theta_sketch install the TopK rewrite session-wide when ANY suite
-    // evaluates them (a declared fn can only install, never uninstall —
-    // planning is lazy), which would silently rewrite the plain-window
-    // plans pinned below. Keys that need the rewrite re-install it inside
-    // their own fn, so resetting here is always safe.
-    graft.plans.TopK.uninstall(spark)
-    val df = Registry.byName(key).fn(spark, sf)
-    df.queryExecution.executedPlan.toString
-  }
+  private def planOf(key: String): String =
+    Registry.byName(key).fn(spark, sf).queryExecution.executedPlan.toString
 
   test("src_parquet: filter and projection reach the parquet scan") {
     val p = planOf("src_parquet")
@@ -296,11 +287,7 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("q_topn_native: rank-and-filter plans as two-phase TopKPerGroup, no Window") {
-    val p = try {
-      val df = Registry.byName("q_topn_native").fn(spark, sf)
-      df.queryExecution.executedPlan.toString
-    } finally graft.plans.TopK.uninstall(spark) // shared session: other
-                                                // audits pin plain plans
+    val p = planOf("q_topn_native")
     assert("TopKPerGroup".r.findAllIn(p).size == 2,
       s"expected partial+final TopKPerGroupExec:\n$p")
     assert(!p.contains("Window [") && !p.contains("WindowGroupLimit"),
@@ -735,10 +722,7 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("q_theta_sketch: sketch builds ride TopKPerGroup bounded buffers, no WindowExec") {
-    val p = try {
-      val df = Registry.byName("q_theta_sketch").fn(spark, sf)
-      df.queryExecution.executedPlan.toString
-    } finally graft.plans.TopK.uninstall(spark) // shared session hygiene
+    val p = planOf("q_theta_sketch")
     // Every bottom-k (per-set AND union merge) must plan as the bounded
     // partial/final operator pair — a WindowExec here would mean a full
     // sort of the member table per set.
@@ -754,9 +738,7 @@ class PlanAuditSpec extends SparkSuite {
     // construction, so the pin is stronger: the final plan must contain
     // NO parquet re-scan (all base reads happen once inside the cuts)
     // and the consumers must read the shared RDDs.
-    val df = try {
-      Registry.byName("q_theta_sketch").fn(spark, sf)
-    } finally graft.plans.TopK.uninstall(spark)
+    val df = Registry.byName("q_theta_sketch").fn(spark, sf)
     df.collect()
     val fin = df.queryExecution.executedPlan.toString
     assert(!fin.contains("Scan parquet"),

@@ -137,42 +137,14 @@ class PropertySpec extends SparkSuite {
   }
 
   test("topn_native == window row_number spelling on random data") {
-    graft.plans.TopK.install(spark)
-    try testTopnNative()
-    finally graft.plans.TopK.uninstall(spark) // shared session — don't
-                                              // leak the rewrite into
-                                              // suites pinning the plain
-                                              // window plan
-  }
-
-  test("topn_native: a Long-typed rank bound (rn <= 5L) still hits the rewrite") {
-    // rn is IntegerType, so `rn <= 5L` analyzes as Cast(rn AS BIGINT) <= 5L
-    // — boundOf must see through the cast and the Long literal, or the
-    // intended top-k silently falls back to the full window sort.
-    graft.plans.TopK.install(spark)
-    try {
-      val df = randomKv(7, 500)
-      val w = Window.partitionBy($"k").orderBy($"v".desc, $"s")
-      val viaOp = df.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 5L).select($"k", $"rn", $"v", $"s")
-      val p = viaOp.queryExecution.executedPlan.toString
-      assert(p.contains("TopKPerGroup"),
-        s"Long-literal bound missed the rewrite:\n$p")
-      assert(viaOp.count() ==
-        df.withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
-          .count())
-    } finally graft.plans.TopK.uninstall(spark)
-  }
-
-  private def testTopnNative(): Unit = {
     val df = randomKv(99, 500)
     val w = Window.partitionBy($"k").orderBy($"v".desc, $"s")
-    val viaOp = df.withColumn("rn", row_number().over(w)).filter($"rn" <= 4)
-      .select($"k", $"rn", $"v", $"s")
+    val viaOp = graft.plans.TopK.rewrite(
+      df.withColumn("rn", row_number().over(w)).filter($"rn" <= 4)
+        .select($"k", $"rn", $"v", $"s"))
     // the operator must actually be in the plan...
     assert(viaOp.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
-    // ...and agree with the un-rewritten spelling (rank > limit defeats
-    // the rewrite's literal-bound match? no — use a sort-based recompute)
+    // ...and agree with a sort-based recompute of the window spelling
     val expected = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
       .groupBy(_._1).toSeq.flatMap { case (k, rows) =>
@@ -182,6 +154,22 @@ class PropertySpec extends SparkSuite {
     val got = viaOp.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSet
     assert(got == expected, s"native top-k diverged: ${got.diff(expected)}")
+  }
+
+  test("topn_native: a Long-typed rank bound (rn <= 5L) still hits the rewrite") {
+    // rn is IntegerType, so `rn <= 5L` analyzes as Cast(rn AS BIGINT) <= 5L
+    // — boundOf must see through the cast and the Long literal, or the
+    // intended top-k silently falls back to the full window sort.
+    val df = randomKv(7, 500)
+    val w = Window.partitionBy($"k").orderBy($"v".desc, $"s")
+    val viaOp = graft.plans.TopK.rewrite(df.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 5L).select($"k", $"rn", $"v", $"s"))
+    val p = viaOp.queryExecution.executedPlan.toString
+    assert(p.contains("TopKPerGroup"),
+      s"Long-literal bound missed the rewrite:\n$p")
+    assert(viaOp.count() ==
+      df.withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
+        .count())
   }
 
   test("declared results are invariant to shuffle-partition count (AQE determinism)") {

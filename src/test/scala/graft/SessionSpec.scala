@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -20,11 +21,13 @@ class SessionSpec extends SparkSuite {
 
   test("GraftExtensions injects exactly the functions Custom.register installs, " +
        "plus the KernelSubstitution rule") {
+    // ...and the TopKStrategy planner: the whole install list, no more
     val bare = spark.newSession()
     val builtin = functionNames(bare)
     val registered = functionNames(Custom.register(bare)) -- builtin
     val injected = ArrayBuffer.empty[String]
     val rules = ArrayBuffer.empty[Rule[LogicalPlan]]
+    val strategies = ArrayBuffer.empty[SparkStrategy]
     val ext = new SparkSessionExtensions {
       override def injectFunction(
           f: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit = {
@@ -35,13 +38,18 @@ class SessionSpec extends SparkSuite {
         rules += b(spark)
         super.injectOptimizerRule(b)
       }
+      override def injectPlannerStrategy(b: SparkSession => SparkStrategy): Unit = {
+        strategies += b(spark)
+        super.injectPlannerStrategy(b)
+      }
     }
     new GraftExtensions()(ext)
     assert(injected.distinct.size == injected.size, s"injected twice: $injected")
     assert(injected.toSet == registered,
       s"injected ${injected.size} ${injected.sorted} != registered " +
         s"${registered.size} ${registered.toSeq.sorted}")
-    assert(rules.toSeq == Seq(graft.plans.KernelSubstitution))
+    assert(rules.toSeq == GraftExtensions.rules)
+    assert(strategies.toSeq == GraftExtensions.strategies)
   }
 
   test("key contract: every key builds and analyses on a bare new session " +
@@ -67,9 +75,17 @@ class SessionSpec extends SparkSuite {
     assert(bare.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(bare.conf.get("fs.AbstractFileSystem.file.impl") == classOf[graft.io.LocalFs].getName)
     assert(bare.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    // each rule and strategy of the list runs exactly once per
+    // optimization and planning, however often the install ran
+    val state = bare.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    def installed = (state.optimizer.defaultBatches.flatMap(_.rules)
+      .filter(GraftExtensions.rules.contains),
+      state.planner.strategies.filter(GraftExtensions.strategies.contains))
+    assert(installed == (GraftExtensions.rules, GraftExtensions.strategies))
     val before = functionNames(bare)
     Tables.configure(bare)
     assert(functionNames(bare) == before)
+    assert(installed == (GraftExtensions.rules, GraftExtensions.strategies))
   }
 
   test("engine sessions share one executor class loader, so a query run " +

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
-import org.apache.spark.sql.graft.TestShims
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.graft.Frames
 
 /** The reduced-table exemption as a SPEC, not prose (r14 VERDICT #2).
   *
@@ -19,6 +20,10 @@ import org.apache.spark.sql.graft.TestShims
   * below, each entry carrying its measured input counts and the reason
   * the growth is acceptable. Reintroducing q_gini's pre-r14 shape (a
   * bare Window.orderBy rank over the customer dim) fails this suite.
+  *
+  * The same walk checks that a key's plan depends on the key alone: the
+  * keys that ask for the top-k rewrite run first on the shared session,
+  * and no other key's executed plan may then carry its operator.
   *
   * What the thresholds encode:
   *  - floor 256: the ≤32-row prefix-sum offset tables, month/pid spines
@@ -61,15 +66,22 @@ class WindowScaleGuardSpec extends SparkSuite {
   private def windowsOf(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
     plan.collectWithSubqueries { case w: LWindow => w }
 
+  private object Aqe extends AdaptiveSparkPlanHelper
+
   test("no declared plan runs a few-partition window over corpus-growing " +
        "input outside the measured allowlist") {
-    graft.plans.TopK.uninstall(spark)
+    val topkKeys = Set("q_topn_native", "q_theta_sketch")
+    topkKeys.foreach(k => Registry.byName(k).fn(spark, sfSmall))
     val flagged = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val leaked = scala.collection.mutable.ArrayBuffer.empty[String]
     Registry.all.foreach { case (key, q) =>
       try {
-        val smallWins = windowsOf(
-          q.fn(spark, sfSmall).queryExecution.optimizedPlan)
+        val small = q.fn(spark, sfSmall)
+        if (!topkKeys(key) && Aqe.collectWithSubqueries(small.queryExecution.executedPlan) {
+              case t: graft.plans.TopKPerGroupExec => t }.nonEmpty)
+          leaked += key
+        val smallWins = windowsOf(small.queryExecution.optimizedPlan)
         if (smallWins.nonEmpty) {
           val bigWins = windowsOf(
             q.fn(spark, sfBig).queryExecution.optimizedPlan)
@@ -80,9 +92,9 @@ class WindowScaleGuardSpec extends SparkSuite {
               s"(${smallWins.size} at sf0.001 vs ${bigWins.size} at " +
               s"sf0.01) — guard cannot pair windows for growth measurement")
           smallWins.zip(bigWins).foreach { case (ws, wb) =>
-            val nBig = TestShims.ofRows(spark, wb.child).count()
+            val nBig = Frames.ofRows(spark, wb.child).count()
             if (nBig > rowFloor) {
-              val nSmall = TestShims.ofRows(spark, ws.child).count()
+              val nSmall = Frames.ofRows(spark, ws.child).count()
               if (nBig >= growthFlag * math.max(nSmall, 1L)) {
                 // growing input — only a problem when the partitioning
                 // cannot spread it: unpartitioned/foldable, or few
@@ -103,7 +115,7 @@ class WindowScaleGuardSpec extends SparkSuite {
                   if (pidPartitioned) Long.MaxValue
                   else if (wb.partitionSpec.isEmpty ||
                       wb.partitionSpec.forall(_.foldable)) 1L
-                  else TestShims.ofRows(spark,
+                  else Frames.ofRows(spark,
                     Aggregate(wb.partitionSpec,
                       wb.partitionSpec.zipWithIndex.map { case (e, i) =>
                         Alias(e, s"g$i")() },
@@ -123,6 +135,8 @@ class WindowScaleGuardSpec extends SparkSuite {
     assert(failures.isEmpty,
       s"guard could not inspect ${failures.size} key(s): " +
         failures.take(5).map { case (k, m) => s"$k ($m)" }.mkString("; "))
+    assert(leaked.isEmpty,
+      s"the top-k rewrite asked for by $topkKeys reached other keys: $leaked")
     val unlisted = flagged.filterNot { case (k, _) => allowlist.contains(k) }
     assert(unlisted.isEmpty,
       "few-partition windows over corpus-growing input with no allowlist " +
