@@ -144,8 +144,8 @@ def main():
         ' (BASELINE r8-sf1 adjudication: no lossless JW>=0.93 prefilter'
         ' exists for these names); kept as the kernel + recall ground'
         ' truth for fn_jaro_snm (e=0.37 at sf1, e=0.13 at sf10; recall is'
-        ' W-SLA-tunable and MEASURED, not assumed — graft.ScaleRecall'
-        ' w_curve, BASELINE fn_jaro_snm measured recall r12: W=10 0.62,'
+        ' W-SLA-tunable and MEASURED, not assumed — BASELINE fn_jaro_snm'
+        ' measured recall r12: W=10 0.62,'
         ' 25 0.77, 50 0.90, 100 1.00 top-100 on the exact-name-deduped'
         ' corpus; the earlier recall-1.0-at-sf1 claim was tie-saturated'
         ' by ScaleGen verbatim name copies and is superseded)"}',
@@ -158,8 +158,8 @@ def main():
         ' e=1.73). Kept as the recall ground truth for llm_mutual_nn_snm'
         ' (multi-pass sorted-neighborhood, P=8 projections x W=24 —'
         ' rows x 192 cosines, linear for any block distribution; measured'
-        ' recall/precision vs this key: graft.MnnRecall, BASELINE'
-        ' llm_mutual_nn_snm measured recall r13). The sibling-pair-emitter'
+        ' recall/precision vs this key: BASELINE llm_mutual_nn_snm'
+        ' measured recall r13). The sibling-pair-emitter'
         ' keys on the same candidate table (llm_sim_pairs,'
         ' llm_dedup_thresholds, llm_dedup_embcos) are OUTPUT-bound: their'
         ' declared answer IS the pair set, which itself grows x100/decade'

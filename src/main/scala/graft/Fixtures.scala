@@ -9,7 +9,7 @@ package graft
   *   2. otherwise `<user.dir>/target/graft_fixtures/<sf-tag>`, where the
   *      sf tag comes from the `graft.fixtures.sf` system property every
   *      entry point sets from ITS scale dir before first use
-  *      (Verify/Bench/the recall mains; ScalaTest pins
+  *      (Verify/Bench/PlanDump/SpillProbe; ScalaTest pins
   *      sf0.001 in SparkSuite).
   *
   * The SF TAG is the r14 hardening: fixture content derives from the

@@ -136,7 +136,8 @@ private[graft] object Memo {
   // cross-run result caching, prohibited by the optimization round.
   // materializedPath below remains for the WRITE-ONCE FIXTURE LAYOUTS
   // that are themselves the declared operator's data structure (the
-  // bucketed ANN lake, the MinHash band index, scan fixtures).
+  // bucketed ANN lake, the MinHash band index, the bucketed join tables,
+  // the lang-partitioned documents, the ingest features).
 
   /** Write-once MATERIALIZED LAYOUT (the on-disk sibling of [[stage]]):
     * returns a directory containing `write`'s output for this (dataset,

@@ -150,10 +150,10 @@ object Similarity {
 
   /** Hamming-≤3 ball over the 4-bit sign code, nearest-first: the 15
     * XOR masks (only 0b1111 is outside the ball). Shared by the
-    * in-memory multiprobe, the partitioned-lake h3 probe and
-    * graft.AnnRecall's radius ladder so the recall-SLA ball is defined
-    * exactly once. */
-  private[graft] val ballMasks = Seq(0, 1, 2, 4, 8, 3, 5, 6, 9, 10, 12, 7, 11, 13, 14)
+    * in-memory multiprobe and the partitioned-lake h3 probe so the
+    * recall-SLA ball is defined exactly once (its radius-vs-recall
+    * ladder: BASELINE.md "ANN radius-vs-recall r11"). */
+  private val ballMasks = Seq(0, 1, 2, 4, 8, 3, 5, 6, 9, 10, 12, 7, 11, 13, 14)
 
   /** Hamming-≤2 ball over the 8-BIT code: 1 + 8 + C(8,2) = 37 XOR masks
     * — the 0.99-recall-SLA operating point of the measured width curve
@@ -166,7 +166,7 @@ object Similarity {
         yield (1 << i) | (1 << j)))
 
   /** 4-bit hyperplane sign code over the first 4 dims. */
-  private[graft] val codeE =
+  private val codeE =
     """CAST(CASE WHEN element_at(embedding, 1) > 0 THEN 8 ELSE 0 END +
             CASE WHEN element_at(embedding, 2) > 0 THEN 4 ELSE 0 END +
             CASE WHEN element_at(embedding, 3) > 0 THEN 2 ELSE 0 END +
@@ -182,7 +182,7 @@ object Similarity {
     * the width is the ANN lake's CELL-COUNT knob — at 100 TB the lake
     * holds thousands of cells (8 bits = 256, 12 = 4096), and the
     * recall-vs-probe-cost curve per width is measured, not assumed
-    * (graft.AnnRecall --widths; BASELINE.md "ANN bucket-width curve").
+    * (BASELINE.md "ANN bucket-width curve r13").
     * Generated and literal spellings agree for bits = 4 — pinned in
     * PlanAuditSpec's width audit against the declared key's buckets. */
   private[graft] def codeEW(bits: Int): String = {
@@ -202,8 +202,8 @@ object Similarity {
     * toward the realistic thousands-of-cells layout (r12 VERDICT #3);
     * the 4-bit instance keeps its original memo key so declared-key
     * lakes built by earlier rounds stay valid. */
-  private[graft] def annLakeW(s: org.apache.spark.sql.SparkSession,
-                              dir: String, bits: Int) = {
+  private def annLakeW(s: org.apache.spark.sql.SparkSession,
+                       dir: String, bits: Int) = {
     val key = if (bits == 4) "emb_by_bucket" else s"emb_by_bucket_b$bits"
     val out = Memo.materializedPath(s, dir, key) { tmp =>
       Tables.embeddings(s, dir)
@@ -428,7 +428,7 @@ object Similarity {
 
     // The WIDE lake as a declared, oracle-gated key (r13; the width
     // story's correctness leg — PlanAuditSpec pins its DPP mechanics and
-    // the AnnRecall width curve carries its measured recall/cost): the
+    // BASELINE.md's width curve carries its measured recall/cost): the
     // SAME broadcast-probe top-10 as llm_ann_partitioned, on the 8-bit /
     // 256-cell lake (annLakeW(8)) at its hamming-1 ball — 9 of 256
     // directories, the capacity-planning point where widening beats
@@ -659,9 +659,10 @@ object Similarity {
     // for ANY block-size distribution. Near-identical replicas land
     // ADJACENT in the sort, so the window keeps exactly the pairs the
     // mutual filter can ever emit; recall vs the exact key is MEASURED
-    // (graft.MnnRecall; BASELINE "llm_mutual_nn_snm measured recall
-    // r13"), not assumed. PairJoin.neighbors pairs ids only; payloads
-    // attach after the distinct (never copy a 64-float vector 16×).
+    // (BASELINE.md "llm_mutual_nn_snm measured recall r13"; ScreensSpec
+    // pins pair-set equality at sf0.001), not assumed.
+    // PairJoin.neighbors pairs ids only; payloads attach after the
+    // distinct (never copy a 64-float vector 16×).
     "llm_mutual_nn_snm" -> Q(
       (s, dir) => {
         val W = 24; val P = 8 // window per pass; projection passes

@@ -28,12 +28,12 @@ object Insights {
   /** Exact-quadratic scored pairs (id_a, id_b, name_a, name_b, jw ≥ 0.93)
     * within (mktsegment, nationkey) blocks over an arbitrary
     * (c_custkey, c_name, c_mktsegment, c_nationkey) corpus — the
-    * declared fn_jaro substrate AND the ground-truth stream ScaleRecall
-    * derives every recall view from (each view is its own streaming
-    * pass; the stream is never persisted — r12 disk-full finding).
+    * declared fn_jaro substrate AND the recall ground truth of
+    * BASELINE.md "fn_jaro_snm measured recall r12" (never persisted:
+    * the r12 disk-full finding).
     * Exact, therefore Σ block² (adjudicated in BASELINE §r8-sf1).
     * `corpus`' session must be installed ([[graft.Tables.configure]]). */
-  private[graft] def jaroScoredOf(corpus: org.apache.spark.sql.DataFrame) = {
+  private def jaroScoredOf(corpus: org.apache.spark.sql.DataFrame) = {
     // Hand-spelled on purpose: both sides are the bare scan, and a
     // PairJoin's suffix renames would add a Project to each.
     val c = corpus.select(col("c_custkey"), col("c_name"),
@@ -51,27 +51,15 @@ object Insights {
   /** SNM scored candidate pairs over an arbitrary corpus (same columns
     * as [[jaroScoredOf]]; a pair can appear in both passes — dedupe at
     * the consumer's grain). */
-  private[graft] def snmScoredOf(corpus: org.apache.spark.sql.DataFrame,
-                                 w: Int = SNM_W) =
+  private def snmScoredOf(corpus: org.apache.spark.sql.DataFrame,
+                          w: Int = SNM_W) =
     snmCandidates(corpus, w)
       .withColumn("jw", round(expr("jaro_winkler(name_a, name_b)"), 6))
       .filter(col("jw") >= 0.93)
 
-  /** Top-100 under the declared (jw desc, id_a, id_b) total order.
-    * `excludeEqual = true` restricts to genuinely NEAR pairs
-    * (name_a ≠ name_b): under ScaleGen replication names copy VERBATIM,
-    * so at sf10 every name has ~100 exact copies and the unrestricted
-    * top-100 saturates with ONE clique's id-ordered jw = 1.0 pairs — a
-    * tie artifact that measures the id tiebreaker, not the matcher (see
-    * BASELINE.md's sf10 recall adjudication). Production removes exact
-    * duplicates BEFORE fuzzy matching (the llm_ingest_e2e funnel stage
-    * 1); the near-restricted variant is the recall ground truth for
-    * what SNM exists to find. */
-  private[graft] def topPairs(scored: org.apache.spark.sql.DataFrame,
-                              excludeEqual: Boolean = false) =
-    (if (excludeEqual) scored.filter(col("name_a") =!= col("name_b"))
-     else scored)
-      .select(col("id_a"), col("id_b"), col("jw"))
+  /** Top-100 under the declared (jw desc, id_a, id_b) total order. */
+  private def topPairs(scored: org.apache.spark.sql.DataFrame) =
+    scored.select(col("id_a"), col("id_b"), col("jw"))
       .distinct()
       .orderBy(col("jw").desc, col("id_a"), col("id_b"))
       .limit(100)
@@ -844,8 +832,8 @@ object Insights {
     // win at ×10 data that widens with every further scale step). The neighbor join is an
     // EQUI-join on (block, rank + k), k exploded 1..W — never a
     // range/theta join. W is the recall knob exactly like the ANN ball
-    // radius, and recall is MEASURED, not hoped (graft.ScaleRecall;
-    // BASELINE.md "fn_jaro_snm measured recall r12"): on the fixture's
+    // radius, and recall is MEASURED, not hoped (BASELINE.md
+    // "fn_jaro_snm measured recall r12"): on the fixture's
     // pathologically self-similar TPC-H name space (63% of all within-
     // block pairs clear JW 0.93, so the top-100 ranks a razor-thin
     // margin over ~562k qualifying pairs at sf0.1) the top-100 recall
@@ -864,7 +852,7 @@ object Insights {
     // identical at every scale), but measured-essential under
     // duplication: at sf1's 10 verbatim copies/name the windows fill
     // with exact copies and crowd out near-name neighbors (entity
-    // recall 0.37 → 0.05, graft.ScaleRecall), while dedup-first recall
+    // recall 0.37 → 0.05, BASELINE.md r12), while dedup-first recall
     // is replication-INVARIANT (0.62 at W=10 at sf0.1/sf1/sf10 alike).
     // Exact-duplicate cliques link through their representative — the
     // same funnel order as llm_ingest_e2e stage 1.
@@ -917,8 +905,9 @@ object Insights {
 
     // The recall-SLA sibling (r12 VERDICT #1): SAME dedup-first SNM
     // kernel, W = 50 — the measured ≥ 0.9 point on the W-curve
-    // (ScaleRecall: W=10/25/50/100 → 0.62/0.77/0.90/1.00, replication-
-    // invariant across sf0.1/sf1/sf10). Cost stays linear (rows × 2W
+    // (BASELINE.md "fn_jaro_snm_w50 recall SLA closed r13": W=10/25/50/100
+    // → 0.62/0.77/0.90/1.00, replication-invariant across
+    // sf0.1/sf1/sf10). Cost stays linear (rows × 2W
     // comparisons; 5× fn_jaro_snm's candidate count, still nowhere near
     // the exact plan's Σ block²). fn_jaro_snm (W=10) remains declared as
     // the cheap point on the same curve — production picks W from the

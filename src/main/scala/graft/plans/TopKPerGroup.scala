@@ -59,6 +59,9 @@ case class TopKPerGroupExec(
 
   override def output: Seq[Attribute] =
     if (partial) child.output else child.output :+ rnAttr
+  // rnAttr is minted here, not read from the child: without this the
+  // plan string marks the node as missing input (`!TopKPerGroup`)
+  override def producedAttributes: AttributeSet = AttributeSet(rnAttr)
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) UnspecifiedDistribution :: Nil

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{Q, Tables}
+import graft.llm.Memo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -938,20 +939,18 @@ object Scans {
     // story (snk_partitioned is the write): a layout partitioned by a
     // predicate column turns the filter into directory selection, so the
     // scan never opens the other partitions' files at all. The layout is
-    // written once per data dir (same amortized-layout contract as
-    // q_join_bucketed); the DECLARED query is the pruned read.
+    // written once per data version (Memo.materializedPath, the same
+    // amortized-layout contract as q_join_bucketed); the DECLARED query
+    // is the pruned read.
     // PlanAuditSpec pins PartitionFilters in the scan node — at 100 TB
     // this is the difference between reading one lang's TBs and all of
     // them. Oracle recomputes from the unpartitioned source.
     "src_partition_pruning" -> Q(
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val out = s"$fixDir/docs_by_lang_$tag"
-        val done = new java.io.File(s"$out/_SUCCESS")
-        if (!done.exists()) {
+        val out = Memo.materializedPath(s, dir, "docs_by_lang") { tmp =>
           Tables.documents(s, dir)
             .repartition(col("lang"))
-            .write.mode("overwrite").partitionBy("lang").parquet(out)
+            .write.partitionBy("lang").parquet(tmp)
         }
         s.read.parquet(out)
           .filter(col("lang") === "en")

@@ -290,6 +290,7 @@ class PlanAuditSpec extends SparkSuite {
     val p = planOf("q_topn_native")
     assert("TopKPerGroup".r.findAllIn(p).size == 2,
       s"expected partial+final TopKPerGroupExec:\n$p")
+    assert(!p.contains("!TopKPerGroup"), s"TopKPerGroup marked as missing input:\n$p")
     assert(!p.contains("Window [") && !p.contains("WindowGroupLimit"),
       s"window machinery survived the rewrite:\n$p")
     // the only Sort is the declared output order — never the input
@@ -412,16 +413,64 @@ class PlanAuditSpec extends SparkSuite {
   test("q_join_bucketed: second invocation reuses the written layout") {
     // first call materializes (or re-registers) the bucketed tables …
     Registry.byName("q_join_bucketed").fn(spark, sf).collect()
-    val tag = sf.replaceAll("[^A-Za-z0-9]", "_")
-    val loc = new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath,
-      s"graft_b_orders_$tag")
-    assert(loc.exists(), "bucketed layout missing after first run")
+    val loc = new java.io.File(graft.llm.Memo.materializedPath(
+        spark, sf, "graft_b_orders", Seq("orders.parquet")) { _ =>
+      fail("bucketed layout missing after first run")
+    })
     val before = loc.listFiles().map(f => f.getName -> f.lastModified()).toMap
     // … the second call must NOT rewrite them (the one-time-layout claim)
     Registry.byName("q_join_bucketed").fn(spark, sf).collect()
     val after = loc.listFiles().map(f => f.getName -> f.lastModified()).toMap
     assert(after == before, "bucketed layout was rewritten on reuse path")
+  }
+
+  test("q_join_bucketed, src_partition_pruning: a regenerated source gets a fresh layout") {
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    def rm(p: Path): Unit = if (Files.exists(p))
+      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete(_))
+    val root = Paths.get(graft.Fixtures.dir)
+    val d = root.resolve("regen_fixture")
+    val tag = d.toString.replaceAll("[^A-Za-z0-9]", "_")
+    def layouts = Files.list(root).iterator().asScala
+      .filter(_.getFileName.toString.contains(tag)).toSeq
+    rm(d); layouts.foreach(rm)
+    try {
+      Files.createDirectories(d)
+      Seq("documents", "orders", "lineitem").foreach(t =>
+        Files.copy(Paths.get(sf, s"$t.parquet"), d.resolve(s"$t.parquet")))
+      val dir = d.toString
+      // the keys' aggregates, recomputed from the plain source files
+      def expected = (
+        Tables.documents(spark, dir).filter(col("lang") === "en")
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
+          .orderBy(col("source")).collect().toSeq,
+        Tables.lineitem(spark, dir)
+          .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n_items"), H.dsum(col("l_quantity")).as("sum_qty"))
+          .orderBy(col("o_orderstatus")).collect().toSeq)
+      def actual = (
+        Registry.byName("src_partition_pruning").fn(spark, dir).collect().toSeq,
+        Registry.byName("q_join_bucketed").fn(spark, dir).collect().toSeq)
+      val first = expected
+      assert(actual == first, "layouts disagree with their sources")
+      // regenerate two sources with a strict subset of their rows
+      def rewrite(t: String, keep: org.apache.spark.sql.Column): Unit = {
+        val next = d.resolve(s"$t.next")
+        spark.read.parquet(d.resolve(s"$t.parquet").toString).filter(keep)
+          .write.parquet(next.toString)
+        rm(d.resolve(s"$t.parquet"))
+        Files.move(next, d.resolve(s"$t.parquet"), StandardCopyOption.ATOMIC_MOVE)
+      }
+      rewrite("documents", col("doc_id") % 2 === 0)
+      rewrite("orders", col("o_orderkey") % 3 =!= 0)
+      val second = expected
+      assert(second._1 != first._1 && second._2 != first._2,
+        "the rewrite left an aggregate unchanged")
+      assert(actual == second, "a layout served its source's old rows")
+    } finally { rm(d); layouts.foreach(rm) }
   }
 
   test("src_partition_pruning: the lang predicate prunes partitions at the scan") {
@@ -728,6 +777,7 @@ class PlanAuditSpec extends SparkSuite {
     // sort of the member table per set.
     assert("TopKPerGroup".r.findAllIn(p).size >= 2,
       s"bottom-k not planned as TopKPerGroup:\n$p")
+    assert(!p.contains("!TopKPerGroup"), s"TopKPerGroup marked as missing input:\n$p")
     assert(!p.contains("Window ["),
       s"a window survived — per-set sort is back:\n$p")
     // The sketch subtree is read by several consumers (stats, union,

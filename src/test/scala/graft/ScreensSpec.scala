@@ -275,6 +275,11 @@ class ScreensSpec extends SparkSuite {
       assert(r.getLong(0) < r.getLong(1), "pair not canonically ordered")
       assert(r.getDouble(2) >= 0.2, "pair below the candidate threshold")
     }
+    // the linear sibling finds exactly the exact key's pairs at this scale
+    val snm = Registry.byName("llm_mutual_nn_snm").fn(spark, sf)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(snm == rows.map(r => (r.getLong(0), r.getLong(1))).toSet,
+      "llm_mutual_nn_snm's pairs differ from llm_mutual_nn's")
   }
 
   test("llm_silhouette: means bounded, counts partition the corpus") {
